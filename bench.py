@@ -274,7 +274,7 @@ def run_fat_round_bench(spark) -> dict:
         try:
             eng = CrawlEngine(
                 spark, f"{d}/state", fetcher, tasks, rules, robots,
-                round_s=60, bloom_min_seen=1 << 60,
+                round_s=60,
             )
             eng.init_state(frontier)
             t0 = time.time()
@@ -575,7 +575,7 @@ def run_crawl_bench_inproc(spark) -> dict:
         n_pages = fetcher.graph.count()  # materialize corpus outside the timer
         eng = CrawlEngine(
             spark, f"{d}/state", fetcher, tasks, rules, robots,
-            round_s=60, bloom_min_seen=20_000,
+            round_s=60,
         )
         eng.init_state(bench_seeds(spark))
         t0 = time.time()
@@ -614,8 +614,8 @@ def run_steady_state_bench(spark) -> dict:
     pages any run pops, since pops are (-priority, seq) and the fat
     frontier is seq-ordered) is rendered once and shared by every run, so
     the only thing that varies between runs is frontier size and mode.
-    Round 1 is reported but excluded from the steady figure (bloom/JIT/
-    codegen warmup); steady_round_s = MIN over rounds 2..R (the same
+    Round 1 is reported but excluded from the steady figure (JIT/codegen
+    warmup); steady_round_s = MIN over rounds 2..R (the same
     additive-noise floor estimator as the scaling protocol).
 
     Read: delta's growth ratio steady(S_max)/steady(S_min) vs snapshot's.

@@ -6,7 +6,7 @@ deterministic batch micro-rounds over parquet/Iceberg tables:
 
 - frontier table + weighted priority-queue wave selection
   (reference: engine/schedule.go:248-290 two-class FIFO queues)
-- exact URL-seen set with Bloom pre-filter
+- exact URL-seen set (one left_anti join against the seen table)
   (reference: engine/schedule.go:412-429 visited map, md5 key
   spider/request.go:113-117)
 - multi-tier token-bucket politeness budgets

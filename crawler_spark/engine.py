@@ -4,24 +4,26 @@ Implements the contract defined in oracle.py (which in turn pins the
 reference's fetch-parse-store loop, engine/schedule.go:324-447, to its
 disabled-jitter batch-equivalent semantics). One round:
 
-    frontier ──expire──dedup(Bloom+anti-join)──budget top-k──host cap──▶ wave
+    frontier ──expire──dedup(anti-join)──budget top-k──host cap──▶ wave
     wave ──salted repartition──fetch──validity──┬─▶ retries/failures
                                                 └─▶ parse ─▶ documents/items/links
     links ──canonicalize──robots──seq──▶ frontier Δ        (next round)
 
-Every stage is DataFrame algebra or an Arrow-batched pandas UDF; the driver
-only moves scalar budget state (a few ints per task) and round counters.
-Shuffles per round: the seen anti-join (Bloom-prefiltered), the two
-budgeted top-k windows (locally pruned first), the host-salted repartition,
-and the link seq assignment (wave-bounded). All are bounded by the wave /
-politeness budget except the anti-join, which is the irreducible frontier
-cost (Iceberg MERGE at production scale).
+Every stage is DataFrame algebra; with GraphFetcher and the JVM parse path
+a round starts no Python worker (HttpFetcher's transport and the pandas
+parse fallback are the Arrow-batched exceptions). The driver only moves
+scalar budget state (a few ints per task) and round counters, and every
+frame it builds from its own rows (tasks, robots, budgets, counts, seq
+offsets, rules, queued seeds) is an Arrow local relation
+(``schemas.local_frame``) that plans as a task-free LocalTableScan.
+Shuffles per round: the exact seen anti-join, the two budgeted top-k
+windows (locally pruned first), the host-salted repartition, and the link
+seq assignment (wave-bounded). All are bounded by the wave / politeness
+budget except the anti-join, which is the irreducible frontier cost
+(Iceberg MERGE at production scale).
 
 Per-round driver work is kept O(|wave|), never O(|seen|):
 - the seen-set size is a manifest counter, not a count() scan;
-- the Bloom pre-filter is maintained incrementally — each round ORs in a
-  bitmap built from that round's seen delta (wave-bounded); the full-table
-  build runs only once, on first crossing the threshold or after resume;
 - per-task outcome counts ride the scratch WRITES as Observation metrics
   (no extra jobs or scans; the only remaining accounting job is the
   link/retry (task, pid) count that doubles as the dense-seq offset
@@ -39,8 +41,10 @@ from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, IntegerType, StringType, StructField, StructType
 
 from . import schemas
+from .schemas import local_frame
 from .state import SnapshotStore
 from .textcore import (
     LimitTier,
@@ -51,7 +55,9 @@ from .textcore import (
     tier_carry_after,
 )
 from .operators.canon import with_canonical
-from .operators.dedup import anti_join_seen, build_bloom, or_blooms
+# imported by name (not as ``dedup.anti_join_seen``): perfbench/tracing.py
+# times it by wrapping this module's attribute
+from .operators.dedup import anti_join_seen
 from .operators.fetch import GraphFetcher
 from .operators.parse import parse_fetched
 from .operators.seq import finalize_dense_seq, prepare_dense_seq, rank_key_col
@@ -63,6 +69,26 @@ from .operators.topk import budgeted_topk
 # Tasks are preset parser configs (reference: a handful, engine/schedule.go
 # preset task registry) — config-scale like rules, never data-scale.
 _OBS_MAX_TASKS = 256
+
+# the expire filter's per-task dim
+_TASKS_DIM = StructType(
+    [
+        StructField("task", StringType()),
+        StructField("reload", BooleanType()),
+        StructField("max_depth", IntegerType()),
+        StructField("closed", BooleanType()),
+    ]
+)
+
+
+# Nothing calls these: the seen anti-join has no Bloom prefilter. Both names
+# stay only because perfbench/tracing.py wraps them on this module by name;
+# drop them together with the tracer's entries.
+def build_bloom(*_args, **_kw):
+    raise NotImplementedError("the seen anti-join has no Bloom prefilter")
+
+
+or_blooms = build_bloom
 
 
 def _bucket_meta(bucket_rows: int, counts_rows) -> dict:
@@ -198,13 +224,14 @@ class CrawlEngine:
         robots: list[dict],
         round_s: int = 60,
         bloom_min_seen: int = 50_000,
-        bloom_bits: int = 1 << 22,
         typed_tables: bool = False,
         frontier_mode: str = "snapshot",
         frontier_compact_factor: float = 2.0,
         frontier_bucket_rows: int = 65536,
         revisit_plan=None,
     ):
+        # ``bloom_min_seen`` is accepted and ignored: the seen prefilter it
+        # configured was removed, and perfbench still passes it.
         # ``frontier_mode``:
         # - "snapshot": every round rewrites the surviving frontier (the
         #   Iceberg MERGE copy-on-write analog). Simple, but a budget-bound
@@ -243,8 +270,6 @@ class CrawlEngine:
         self.rules = rules
         self.robots = robots
         self.round_s = round_s
-        self.bloom_min_seen = bloom_min_seen
-        self.bloom_bits = bloom_bits
         # per-task typed result tables (sqlstorage.go:43-61 table-per-task
         # from ItemFields): a derived projection of the map-typed results
         # envelope, written under typed/<task>__<rule>/round=N. Off by
@@ -256,9 +281,7 @@ class CrawlEngine:
         # per-host round caps as a DATAFRAME derived from the robots table
         # (never a driver dict / CASE chain: at 10^7+ hosts the budget side
         # must stay distributed; topk joins it against per-wave host counts)
-        self._host_budgets = spark.createDataFrame(
-            robots, schemas.ROBOTS
-        ).select(
+        self._host_budgets = local_frame(spark, robots, schemas.ROBOTS).select(
             "host",
             F.when(F.col("crawl_delay_ms") <= 0, F.lit(1 << 40))
             .otherwise(F.floor(F.lit(round_s * 1000) / F.col("crawl_delay_ms")))
@@ -299,33 +322,16 @@ class CrawlEngine:
         self._hostcap_active = revisit_plan is not None or any(
             int(r.get("crawl_delay_ms", 0) or 0) > 0 for r in robots
         )
-        # incrementally-maintained Bloom bitmap over the seen table; rebuilt
-        # from the table once per process (resume), then delta-ORed per round
-        self._bloom: bytes | None = None
         self.shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # tiny dims, broadcast once (rebuilt on dynamic task open/close)
         self._rebuild_tasks_df()
         # seeds queued by run_task, seq-stamped at next round start
         self._pending_seeds: list[dict] = []
         self._robots_df = F.broadcast(
-            spark.createDataFrame(robots, schemas.ROBOTS).withColumnRenamed(
+            local_frame(spark, robots, schemas.ROBOTS).withColumnRenamed(
                 "host", "rhost"
             )
         )
-        # Warm the Python worker pool ONCE, outside any timed round: with
-        # the JVM parse path no pandas UDF runs until the Bloom delta's
-        # first mapInPandas, which then cold-starts ~P workers partly
-        # serialized — measured 10.6s landing inside the round that first
-        # crosses bloom_min_seen. Real-cluster executors are long-lived
-        # with warm pools, so paying this at engine construction mirrors
-        # the steady state. Skipped when the Bloom can never activate
-        # (e.g. the fat-wave scaling bench pins bloom_min_seen=2^60).
-        if self.bloom_min_seen < (1 << 40):
-            self._desc(0, "python-pool-warmup")
-            p = spark.sparkContext.defaultParallelism
-            spark.range(0, p, 1, p).mapInPandas(
-                lambda batches: batches, "id long"
-            ).count()
 
     def _labeled(self, rnd: int, what: str, fn, *args, **kw):
         """Run ``fn`` with the round's job description set on the CALLING
@@ -378,16 +384,13 @@ class CrawlEngine:
 
     def _rebuild_tasks_df(self) -> None:
         self._tasks_df = F.broadcast(
-            self.spark.createDataFrame(
+            local_frame(
+                self.spark,
                 [
-                    {
-                        "task": t.name,
-                        "reload": t.reload,
-                        "max_depth": t.max_depth,
-                        "closed": t.closed,
-                    }
+                    (t.name, t.reload, t.max_depth, t.closed)
                     for t in self.tasks.values()
-                ]
+                ],
+                _TASKS_DIM,
             )
         )
 
@@ -435,10 +438,9 @@ class CrawlEngine:
         bcounts = self.store.write_frontier(
             0, seeds, bucket_rows=bucket_rows or None
         )
-        empty_seen = self.spark.createDataFrame([], schemas.SEEN)
-        self.store.append("seen", 0, empty_seen)
+        self.store.append("seen", 0, local_frame(self.spark, [], schemas.SEEN))
         self.store.append(
-            "failed_once", 0, self.spark.createDataFrame([], "key string")
+            "failed_once", 0, local_frame(self.spark, [], schemas.FAILED_ONCE)
         )
         per_task = seeds.groupBy("task").agg(
             F.max("seq").alias("mx"), F.count(F.lit(1)).alias("n")
@@ -532,7 +534,7 @@ class CrawlEngine:
             frontier = self.store.read_frontier(fr_round)
         seen = self.store.read_through("seen", prev)
         if seen is None:
-            seen = spark.createDataFrame([], schemas.SEEN)
+            seen = local_frame(spark, [], schemas.SEEN)
         failed_once = self.store.read_through("failed_once", prev)
         carries = {k: list(v) for k, v in man["carries"].items()}
         max_seq = man["max_seq"]
@@ -563,7 +565,7 @@ class CrawlEngine:
             # ones are simultaneously tombstoned, which nets out exactly)
             stamped_seed_rows = rows
             frontier = frontier.unionByName(
-                spark.createDataFrame(rows, schemas.FRONTIER)
+                local_frame(spark, rows, schemas.FRONTIER)
             )
             # queued seeds may collide with frontier keys (or carry reload)
             frontier_unique = False
@@ -605,14 +607,6 @@ class CrawlEngine:
         n_seen = man.get("seen_count")
         if n_seen is None:  # manifest written before the counter existed
             n_seen = seen.count()
-        bloom = None
-        if n_seen >= self.bloom_min_seen:
-            if self._bloom is None:
-                # first threshold crossing (or resume): one full build; from
-                # here on the per-round delta OR keeps it current
-                self._desc(rnd, "bloom-full-build")
-                self._bloom = build_bloom(seen, "key", self.bloom_bits)
-            bloom = self._bloom
 
         def _cand_filters(fr: DataFrame) -> DataFrame:
             # 1. expire (Request.Check semantics)
@@ -623,17 +617,14 @@ class CrawlEngine:
                 )
                 .drop("max_depth", "closed")
             )
-            # 2. seen dedup: exact anti-join with Bloom pre-filter; reload
-            # bypasses. n_seen == 0 (manifest counter) proves the anti-join
+            # 2. seen dedup: exact anti-join; reload bypasses. n_seen == 0 (manifest counter) proves the anti-join
             # is the identity — skip its shuffle and job entirely.
             # Exactness: seen is append-only and the counter counts
             # appended rows, so 0 ⇒ no key can match.
             if n_seen != 0:
                 non_reload = c.filter(~F.col("reload"))
                 reload_rows = c.filter(F.col("reload"))
-                fresh = anti_join_seen(
-                    non_reload, seen, "key", bloom, self.bloom_bits
-                )
+                fresh = anti_join_seen(non_reload, seen, "key")
                 c = fresh.unionByName(reload_rows)
             return c
 
@@ -1173,7 +1164,7 @@ class CrawlEngine:
                 counted = counted.unionByName(p)
 
         frontier_cols = schemas.FRONTIER.fieldNames()
-        empty_frontier = spark.createDataFrame([], schemas.FRONTIER)
+        empty_frontier = local_frame(spark, [], schemas.FRONTIER)
 
         ok_counts = by_task("ok")
         fail_counts = by_task("fail")
@@ -1353,9 +1344,7 @@ class CrawlEngine:
                     # union only — persist them (waved/dedup-lost ones are
                     # simultaneously tombstoned, which nets out exactly)
                     adds.append(
-                        spark.createDataFrame(
-                            stamped_seed_rows, schemas.FRONTIER
-                        ).select(*frontier_cols)
+                        local_frame(spark, stamped_seed_rows, schemas.FRONTIER)
                     )
                 if adds:
                     adds_df = adds[0]
@@ -1383,9 +1372,7 @@ class CrawlEngine:
                     # so equal counts prove the deferred set empty — skips an
                     # |cand| x |wave| anti-join shuffle on full-throughput
                     # rounds
-                    deferred = spark.createDataFrame(
-                        [], schemas.FRONTIER
-                    ).select(*frontier_cols)
+                    deferred = empty_frontier
                 elif pruned_partial:
                     # compaction after a pruned round: the pruned cand holds
                     # only the read prefix — rebuild the survivor set from
@@ -1565,12 +1552,6 @@ class CrawlEngine:
                     new_man.pop("frontier_buckets", None)
                 new_man["frontier_raw"] = int(n_frontier)
                 self._force_frontier_compact = False
-        # keep the Bloom current with this round's delta (wave-bounded work)
-        if self._bloom is not None and n_seen_delta:
-            self._desc(rnd, "bloom-delta")
-            self._bloom = or_blooms(
-                self._bloom, build_bloom(seen_delta, "key", self.bloom_bits)
-            )
         new_man["stats"] = dict(
             round=rnd,
             selected=n_wave,

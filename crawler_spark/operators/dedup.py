@@ -1,106 +1,27 @@
-"""URL-seen membership: sharded Bloom pre-filter + exact anti-join.
+"""URL-seen membership: the exact anti-join against the seen table.
 
 The reference's visited map (engine/schedule.go:412-429) is an in-memory
-``map[md5key]bool`` — exact, single-node. At a 10^10-key seen set the exact
-structure must live in a table, and the per-round anti-join of candidates
-against it is the dominant shuffle. The Bloom filter is a *pre-filter only*
-(north_rule: exactness via the anti-join escape hatch):
+``map[md5key]bool`` — exact, single-node. Here the seen set is an
+append-only table and a round's candidates take one ``left_anti`` join
+against it: exact by construction, JVM-only, and the seen side is a column
+scan of ``key`` alone.
 
-- build: distributed OR-fold of per-partition numpy bit arrays over
-  xxhash64(key) (double hashing h1 + i*h2, the standard Kirsch-Mitzenmacher
-  scheme) — one treeReduce, no driver-side row loop.
-- probe: broadcast bit array, vectorized numpy membership per Arrow batch.
-- candidates that *might* be seen take the exact anti-join; definite
-  negatives skip the shuffle entirely. False positives cost an extra join
-  row, never correctness.
-
-At true 10^10 scale the single array becomes B independent shards keyed by
-``xxhash64(key) % B`` so each executor broadcasts only the shards it probes;
-the shard math is identical, so the sandbox keeps B=1.
+There is no probabilistic pre-filter. A fixed-size broadcast Bloom filter
+was measured slower than the plain join on the steady-state benchmark
+(SCALE.md, "URL-seen prefilter"): its probe ran in Python workers, the
+optimizer pushed the probe onto the seen side too, and a filter only pays
+when sized to its key count (at 10^6 keys a 2^22-bit filter passes ~16%
+of misses). A JVM-native, manifest-sized filter is the place to start if a
+seen set ever grows too big to join cheaply.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
-_K_HASHES = 5
-
-
-def _positions(h64: np.ndarray, m_bits: int) -> np.ndarray:
-    """(n, K) bit positions via double hashing of the 64-bit key hash."""
-    h = h64.astype(np.uint64)
-    h1 = h & np.uint64(0xFFFFFFFF)
-    h2 = (h >> np.uint64(32)) | np.uint64(1)  # odd -> full-period stepping
-    i = np.arange(_K_HASHES, dtype=np.uint64)
-    return ((h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m_bits)).astype(np.int64)
-
-
-def build_bloom(keys: DataFrame, key_col: str, m_bits: int = 1 << 22) -> bytes:
-    """Distributed Bloom build: per-partition bitmaps, OR-folded on the driver.
-
-    Arrow-batched ``mapInPandas`` (vectorized numpy per batch) — NOT the
-    ``.rdd`` path, which would pickle every row through Python one at a time
-    (~1000x slower per key). Each partition ships back one m_bits/8-byte
-    bitmap; the driver ORs ~shuffle_partitions of them, microseconds of
-    numpy work."""
-    hashed = keys.select(F.xxhash64(key_col).alias("h"))
-
-    def part_bitmap(batches):
-        bits = np.zeros(m_bits // 8, dtype=np.uint8)
-        any_rows = False
-        for pdf in batches:
-            hs = pdf["h"].to_numpy(dtype=np.int64)
-            if hs.size:
-                any_rows = True
-                pos = _positions(hs, m_bits).ravel()
-                np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-        if any_rows:
-            yield pd.DataFrame({"bm": [bits.tobytes()]})
-
-    parts = hashed.mapInPandas(part_bitmap, "bm binary").collect()
-    merged = np.zeros(m_bits // 8, dtype=np.uint8)
-    for r in parts:
-        merged |= np.frombuffer(r["bm"], np.uint8)
-    return merged.tobytes()
-
-
-def or_blooms(a: bytes, b: bytes) -> bytes:
-    """Merge two same-sized Bloom bitmaps (used for incremental maintenance:
-    the engine ORs each round's seen-delta bitmap into the running filter,
-    so per-round build cost is O(|delta|), not O(|seen|)). Safe because the
-    seen table is append-only — a key present in `seen` is always present in
-    the merged filter, preserving the no-false-negative contract."""
-    return (np.frombuffer(a, np.uint8) | np.frombuffer(b, np.uint8)).tobytes()
 
 
 def anti_join_seen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    key_col: str = "key",
-    bloom: bytes | None = None,
-    m_bits: int = 1 << 22,
+    candidates: DataFrame, seen: DataFrame, key_col: str = "key"
 ) -> DataFrame:
-    """Exact ``candidates WHERE key NOT IN seen`` with optional Bloom pre-split."""
-    if bloom is None:
-        return candidates.join(seen.select(key_col), key_col, "left_anti")
-
-    spark = candidates.sparkSession
-    bloom_b = spark.sparkContext.broadcast(bloom)
-
-    @pandas_udf("boolean")
-    def might_contain(h: pd.Series) -> pd.Series:
-        bits = np.frombuffer(bloom_b.value, np.uint8)
-        hs = h.to_numpy(dtype=np.int64)
-        pos = _positions(hs, m_bits)
-        hit = (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-        return pd.Series(hit.all(axis=1))
-
-    tagged = candidates.withColumn("_maybe", might_contain(F.xxhash64(key_col)))
-    definite_new = tagged.filter(~F.col("_maybe")).drop("_maybe")
-    suspects = tagged.filter(F.col("_maybe")).drop("_maybe")
-    checked = suspects.join(seen.select(key_col), key_col, "left_anti")
-    return definite_new.unionByName(checked)
+    """Exact ``candidates WHERE key NOT IN seen``."""
+    return candidates.join(seen.select(key_col), key_col, "left_anti")

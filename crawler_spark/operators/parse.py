@@ -50,7 +50,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from ..schemas import local_frame
 from ..textcore import Rule, extract_spans
 
 PARSED_TYPE = (
@@ -191,21 +193,26 @@ def make_parse_udf(rules: list[Rule]):
     return parse_udf
 
 
+_RULES_DIM = StructType(
+    [
+        StructField("task", StringType()),
+        StructField("rule", StringType()),
+        StructField("next_rule", StringType()),
+        StructField("next_priority", IntegerType()),
+        StructField("carry_field", StringType()),
+    ]
+)
+
+
 def _rules_df(spark, rules: list[Rule]) -> DataFrame:
     return F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
-                {
-                    "task": r.task,
-                    "rule": r.rule,
-                    "next_rule": r.next_rule or r.rule,
-                    "next_priority": r.next_priority,
-                    "carry_field": r.carry_field,
-                }
+                (r.task, r.rule, r.next_rule or r.rule, r.next_priority, r.carry_field)
                 for r in rules
             ],
-            "task string, rule string, next_rule string, "
-            "next_priority int, carry_field string",
+            _RULES_DIM,
         )
     )
 

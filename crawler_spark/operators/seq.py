@@ -39,8 +39,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from ..schemas import local_frame
 
 _LOCAL_MASK = (1 << 33) - 1  # monotonically_increasing_id: pid << 33 | row
+_OFFSETS = StructType(
+    [StructField("_pid", LongType()), StructField("_off", LongType())]
+)
 
 
 def prepare_dense_seq(
@@ -104,7 +110,7 @@ def finalize_dense_seq(
         acc += int(sizes[pid])
     if not offsets:
         offsets = [(0, 0)]
-    off_df = F.broadcast(spark.createDataFrame(offsets, "_pid long, _off long"))
+    off_df = F.broadcast(local_frame(spark, offsets, _OFFSETS))
     bucketed = "_bucket" in with_id.columns
     local_rank = (
         F.col("_rn")

@@ -33,6 +33,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from ..schemas import local_frame
+
+
+def _group_frame(spark, rows, group_col: str, value_col: str) -> DataFrame:
+    return local_frame(
+        spark,
+        rows,
+        StructType(
+            [StructField(group_col, StringType()), StructField(value_col, LongType())]
+        ),
+    )
 
 
 def _order_cols():
@@ -46,9 +59,8 @@ def budgets_df(spark, budgets: dict[str, int], group_col: str) -> DataFrame:
     Only for genuinely small dims (tasks, test fixtures). Host budgets at
     crawl scale must come straight from a robots-derived table.
     """
-    return spark.createDataFrame(
-        [(g, int(k)) for g, k in budgets.items()],
-        f"{group_col} string, _budget long",
+    return _group_frame(
+        spark, [(g, int(k)) for g, k in budgets.items()], group_col, "_budget"
     )
 
 
@@ -75,10 +87,12 @@ def budgeted_topk(
         budgets = budgets_df(df.sparkSession, budgets, group_col)
 
     if group_counts is not None:
-        counts = df.sparkSession.createDataFrame(
-            [(g, int(n)) for g, n in group_counts.items()] or [(None, 0)],
-            f"{group_col} string, _gn long",
-        ).filter(F.col(group_col).isNotNull())
+        counts = _group_frame(
+            df.sparkSession,
+            [(g, int(n)) for g, n in group_counts.items()],
+            group_col,
+            "_gn",
+        )
     else:
         counts = df.groupBy(group_col).agg(F.count("*").alias("_gn"))
     # budgets joined onto the per-group COUNTS (small: one row per distinct

@@ -296,9 +296,10 @@ def bloom_fpr_audit(
     n_bits_set, n_false_pos, fpr_bp) — measured false-positive rate of a
     Bloom filter over ``build`` keys probed with (disjoint) ``probe`` keys.
 
-    The engine's URL-seen pre-filter (operators/dedup.py) is a numpy
-    bitmap over xxhash64; SIZING it (m bits per key, K) is a capacity
-    decision you want measured, not guessed, before a 10^10-key deploy.
+    A URL-seen Bloom pre-filter pays only when sized to its key count (the
+    engine's seen anti-join runs without one; SCALE.md, "URL-seen
+    prefilter"); SIZING it (m bits per key, K) is a capacity decision you
+    want measured, not guessed, before a 10^10-key deploy.
     This audit runs the same double-hashing scheme (Kirsch-Mitzenmacher:
     pos_i = (h1 + i*h2) mod m, h2 forced odd) as a RELATIONAL simulation —
     md5-derived hashes so the result is engine-portable:
@@ -357,7 +358,7 @@ def bloom_fpr_audit(
             "n_probe",
             "n_bits_set",
             "n_false_pos",
-            F.expr("(10000 * n_false_pos) div n_probe").alias("fpr_bp"),
+            F.expr("(10000 * n_false_pos) div greatest(n_probe, 1)").alias("fpr_bp"),
         )
     )
 
@@ -374,8 +375,8 @@ def cuckoo_fpr_audit(
     false-positive rate of a partial-key cuckoo filter (Fan et al.,
     CoNEXT 2014) over ``build`` keys probed with disjoint ``probe``
     keys. The cuckoo side of the URL-seen design space the survey names
-    ("bloom/cuckoo shards"): same pre-filter role as the engine's Bloom
-    shards (operators/dedup.py, sized by ``bloom_fpr_audit``), but with
+    ("bloom/cuckoo shards"): same pre-filter role as a Bloom filter
+    (sized by ``bloom_fpr_audit``), but with
     f-bit fingerprints in 2-choice buckets — FPR ~ 2b/2^f at the same
     ~f bits/key, plus deletability (remove a fingerprint when a frontier
     entry is re-armed for recrawl), which a Bloom bitmap cannot do.
@@ -448,7 +449,7 @@ def cuckoo_fpr_audit(
             "n_probe",
             "n_slots",
             "n_false_pos",
-            F.expr("(10000 * n_false_pos) div n_probe").alias("fpr_bp"),
+            F.expr("(10000 * n_false_pos) div greatest(n_probe, 1)").alias("fpr_bp"),
         )
     )
 

@@ -165,6 +165,9 @@ ROBOTS = StructType(
     ]
 )
 
+# Keys that failed once (the single-retry ledger, engine/schedule.go:431-447).
+FAILED_ONCE = StructType([StructField("key", StringType())])
+
 # Per-round metrics (north_rule: per-partition lineage + fetch metrics).
 ROUND_METRICS = StructType(
     [
@@ -197,3 +200,37 @@ FAILURES = StructType(
         StructField("round", IntegerType(), False),
     ]
 )
+
+
+def arrow_table(rows, schema: StructType):
+    """Driver-held rows (dicts by field name, or tuples in field order) as a
+    ``pyarrow.Table`` typed by the Spark schema.
+
+    pyarrow does not enforce ``nullable=False``, so a missing value in a
+    non-nullable field raises here, as ``createDataFrame(rows, schema)``'s
+    row verifier does, instead of reaching Spark as a NULL in a NOT NULL
+    column."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    names = schema.fieldNames()
+    cols: dict[str, list] = {n: [] for n in names}
+    for r in rows:
+        vals = (r.get(n) for n in names) if isinstance(r, dict) else r
+        for n, v in zip(names, vals):
+            cols[n].append(v)
+    tbl = pa.Table.from_pydict(cols, schema=to_arrow_schema(schema))
+    for f in schema.fields:
+        if not f.nullable and tbl.column(f.name).null_count:
+            raise ValueError(f"field {f.name!r} is not nullable, got None")
+    return tbl
+
+
+def local_frame(spark, rows, schema: StructType):
+    """A DataFrame over driver-held rows that plans as ``LocalTableScan``.
+
+    ``createDataFrame(<list>)`` goes through a pickled RDD: one task and
+    one Python worker per partition for every job that reads the frame.
+    An Arrow table becomes a local relation instead — no tasks and no
+    Python worker."""
+    return spark.createDataFrame(arrow_table(rows, schema))

@@ -54,6 +54,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .schemas import arrow_table
+
 
 class SnapshotStore:
     APPEND_TABLES = (
@@ -277,24 +279,9 @@ class SnapshotStore:
         as one parquet file via pyarrow — no Spark job for data the driver
         already holds. Types follow the Spark schema so read_through unions
         these files with Spark-written deltas seamlessly."""
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        _PA = {
-            "integer": pa.int32(),
-            "long": pa.int64(),
-            "string": pa.string(),
-            "double": pa.float64(),
-            "boolean": pa.bool_(),
-        }
-        fields = [
-            pa.field(f.name, _PA[f.dataType.typeName()], nullable=f.nullable)
-            for f in schema.fields
-        ]
-        tbl = pa.Table.from_pylist(
-            [{f.name: r.get(f.name) for f in schema.fields} for r in rows],
-            schema=pa.schema(fields),
-        )
+        tbl = arrow_table(rows, schema)
         path = os.path.join(self.root, table, f"round={rnd}")
         if os.path.exists(path):  # crashed, uncommitted attempt — overwrite
             shutil.rmtree(path)

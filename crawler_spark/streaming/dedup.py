@@ -6,8 +6,7 @@ reduced to first-ever occurrences, with the seen-set held as Spark-managed
 keyed state instead of a driver-side ``map[string]bool``.
 
 Sharding: state is keyed by ``shard = pmod(xxhash64(key), n_shards)`` so the
-seen-set is spread across ``n_shards`` state partitions — the same sharding
-story as the batch Bloom shards (operators/dedup.py).
+seen-set is spread across ``n_shards`` state partitions.
 
 State layout — O(delta) per-batch compute, not O(state):
 

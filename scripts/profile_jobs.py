@@ -104,7 +104,7 @@ def main() -> None:
         try:
             eng = CrawlEngine(
                 spark, f"{d}/state", fetcher, tasks, rules, robots,
-                round_s=60, bloom_min_seen=1 << 60,
+                round_s=60,
             )
             eng.init_state(frontier)
             if attempt == runs - 1:

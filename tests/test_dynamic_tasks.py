@@ -129,3 +129,22 @@ def test_dynamic_metrics_match(dynamic_crawl):
         for m in oracle.metrics
     )
     assert got == want
+
+
+def test_run_task_seed_missing_field_raises(spark, tmp_path):
+    """A queued seed without a non-nullable FRONTIER field is rejected when
+    the next round builds the seed frame, never carried as a NULL."""
+    fx = make_fixture()
+    write_fixture(fx, str(tmp_path / "fx"), spark)
+    web = spark.read.parquet(str(tmp_path / "fx" / "web_graph"))
+    seeds = spark.read.parquet(str(tmp_path / "fx" / "seeds"))
+    eng = CrawlEngine(
+        spark, str(tmp_path / "state"), GraphFetcher(web),
+        fx.tasks, fx.rules, fx.robots, fx.round_s,
+    )
+    eng.init_state(seeds)
+    (row,) = _topic_seed_rows(fx, n=1)
+    del row["priority"]
+    eng.run_task("group_task", [row])
+    with pytest.raises(ValueError, match="priority"):
+        eng.run(max_rounds=1)

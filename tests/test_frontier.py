@@ -149,6 +149,23 @@ def test_bloom_audit_no_false_negatives_and_sane_fpr(spark):
     assert audit["n_bits_set"] <= 10000
 
 
+def test_fpr_audits_empty_probe(spark):
+    """An empty probe set reports fpr_bp 0 instead of raising ANSI
+    DIVIDE_BY_ZERO on n_probe."""
+    from pyspark.sql import functions as F
+
+    from crawler_spark.pipeline.frontier import bloom_fpr_audit, cuckoo_fpr_audit
+
+    keys = spark.range(100).select(F.concat(F.lit("k"), F.col("id")).alias("key"))
+    empty = keys.limit(0)
+    for row in (
+        bloom_fpr_audit(keys, empty, m_bits=1 << 12, k_hashes=3).first(),
+        cuckoo_fpr_audit(keys, empty, m_buckets=1 << 8, f_bits=8).first(),
+    ):
+        assert row["n_probe"] == 0 and row["n_false_pos"] == 0
+        assert row["fpr_bp"] == 0
+
+
 def test_change_rate_estimate(spark):
     """Bias-reduced Poisson estimator: λ/day = 86400 · ln((2n+1)/(2(n−X)+1))
     · n / span; no-history and zero-span URLs get NULL."""

@@ -43,7 +43,7 @@ def leaf_round(spark, tmp_path_factory):
     )
     eng = CrawlEngine(
         spark, str(tmp_path_factory.mktemp("state")), GraphFetcher(web),
-        tasks, rules, robots, round_s=60, bloom_min_seen=1 << 60,
+        tasks, rules, robots, round_s=60,
     )
     eng.init_state(fat_frontier(spark, N_BOOKS))
     stats = eng.run(max_rounds=2)
@@ -71,7 +71,6 @@ def test_leaf_wave_gates_fire(spark, leaf_round, tmp_path, monkeypatch):
     eng2 = CrawlEngine(
         spark, str(tmp_path / "state2"), eng.fetcher,
         list(eng.tasks.values()), eng.rules, eng.robots, round_s=60,
-        bloom_min_seen=1 << 60,
     )
     eng2.init_state(fat_frontier(spark, N_BOOKS))
     stats2 = eng2.run(max_rounds=1)

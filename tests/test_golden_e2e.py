@@ -30,7 +30,6 @@ def crawl(spark, tmp_path_factory):
         fx.rules,
         fx.robots,
         fx.round_s,
-        bloom_min_seen=1,  # force the Bloom path in the golden run
     )
     return fx, oracle, eng
 

@@ -83,6 +83,61 @@ def test_seen_antijoin_uses_join_not_cartesian(spark):
     plan = _plan(anti_join_seen(cand, seen, "key"))
     assert "LeftAnti" in plan, plan
     assert "CartesianProduct" not in plan
+    # exact and JVM-only: no Python probe on either side of the join
+    for node in _PYTHON_NODES:
+        assert node not in plan, plan
+
+
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+
+
+def _assert_local(df) -> None:
+    """A frame built from driver rows must plan as a task-free local
+    relation, never as a pickled RDD scan (one Python worker per task)."""
+    plan = _plan(df)
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+
+
+def test_round_driver_frames_are_local_relations(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from crawler_spark import schemas
+    from crawler_spark.engine import CrawlEngine
+    from crawler_spark.fixtures import make_fixture
+    from crawler_spark.operators.parse import _rules_df
+    from crawler_spark.operators.seq import finalize_dense_seq, prepare_dense_seq
+    from crawler_spark.operators.topk import budgeted_topk, budgets_df
+
+    fx = make_fixture()
+    eng = CrawlEngine(
+        spark, str(tmp_path / "state"), None, fx.tasks, fx.rules, fx.robots,
+        fx.round_s,
+    )
+    for df in (eng._tasks_df, eng._robots_df, eng._host_budgets):
+        _assert_local(df)
+    _assert_local(budgets_df(spark, {"a": 3, "b": 5}, "task"))
+    _assert_local(_rules_df(spark, fx.rules))
+    for schema in (schemas.FRONTIER, schemas.SEEN):
+        _assert_local(schemas.local_frame(spark, [], schema))
+    _assert_local(schemas.local_frame(spark, fx.seeds, schemas.FRONTIER))
+
+    rows = spark.range(40).select(
+        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("task"),
+        F.lit(0).alias("priority"),
+        F.col("id").alias("seq"),
+    )
+    # the top-k counts and budgets side: no RDD scan anywhere in the pop
+    picked = budgeted_topk(
+        rows, "task", {"a": 3}, 1 << 40, group_counts={"a": 20, "b": 20}
+    )
+    plan = _plan(picked)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    # the seq offsets broadcast
+    prep = prepare_dense_seq(rows, ["seq"], bound=39, n_parts=2)
+    plan = _plan(finalize_dense_seq(prep, {0: 20, 1: 20}, 100))
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    prep.unpersist()
 
 
 def test_pricing_summary_has_partial_aggregation(spark):
