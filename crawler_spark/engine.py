@@ -24,11 +24,11 @@ budget except the anti-join, which is the irreducible frontier cost
 
 Per-round driver work is kept O(|wave|), never O(|seen|):
 - the seen-set size is a manifest counter, not a count() scan;
-- per-task outcome counts ride the scratch WRITES as Observation metrics
-  (no extra jobs or scans; the only remaining accounting job is the
-  link/retry (task, pid) count that doubles as the dense-seq offset
-  source), and the next-frontier size is derived arithmetically instead
-  of re-scanning the written snapshot.
+- per-task outcome counts ride the round's WRITES as Observation metrics
+  (no extra jobs or scans; the one accounting job is the link/retry
+  (task, pid) count that doubles as the dense-seq offset source), and the
+  next-frontier size is derived arithmetically instead of re-scanning the
+  written snapshot.
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace
 
@@ -47,7 +48,6 @@ from . import schemas
 from .schemas import local_frame
 from .state import SnapshotStore
 from .textcore import (
-    LimitTier,
     Rule,
     TaskCfg,
     initial_carry,
@@ -64,11 +64,11 @@ from .operators.seq import finalize_dense_seq, prepare_dense_seq, rank_key_col
 from .operators.topk import budgeted_topk
 
 
-# Above this many configured tasks, per-task Observation expressions stop
-# being plan-size-free and the engine falls back to the grouped-count job.
-# Tasks are preset parser configs (reference: a handful, engine/schedule.go
-# preset task registry) — config-scale like rules, never data-scale.
-_OBS_MAX_TASKS = 256
+# Every Observation carries one expression per configured task, so the task
+# count bounds the round's plan size. Tasks are preset parser configs
+# (reference: a handful, engine/schedule.go preset task registry) —
+# config-scale like rules, never data-scale.
+_MAX_TASKS = 256
 
 # the expire filter's per-task dim
 _TASKS_DIM = StructType(
@@ -89,6 +89,19 @@ def build_bloom(*_args, **_kw):
 
 
 or_blooms = build_bloom
+
+
+def _observed(obs: Observation) -> dict:
+    """An Observation's metrics after its job ran; ``{}`` (every count 0)
+    when the plan dropped it. The optimizer, or AQE once a stage came back
+    empty, replaces a join with an empty input by an empty relation, and an
+    Observation under that join goes with it (``Observation.get`` then
+    fails on the missing row). Both fetchers keep every wave row
+    (GraphFetcher left-joins the wave), so under the fused round's fetch
+    join that happens only when the wave itself is empty."""
+    if obs._jo.getRow().length() == 0:
+        return {}
+    return obs.get
 
 
 def _bucket_meta(bucket_rows: int, counts_rows) -> dict:
@@ -230,6 +243,13 @@ class CrawlEngine:
         frontier_bucket_rows: int = 65536,
         revisit_plan=None,
     ):
+        # tasks are fixed here (set_task_closed/run_task only toggle them),
+        # so this one check bounds every round's Observation width
+        if len(tasks) > _MAX_TASKS:
+            raise ValueError(
+                f"{len(tasks)} tasks configured; the engine supports at most "
+                f"{_MAX_TASKS}"
+            )
         # ``bloom_min_seen`` is accepted and ignored: the seen prefilter it
         # configured was removed, and perfbench still passes it.
         # ``frontier_mode``:
@@ -346,14 +366,31 @@ class CrawlEngine:
         """Label the next Spark jobs (shows up in UI + event logs)."""
         self.spark.sparkContext.setJobDescription(f"r{rnd}:{what}")
 
-    def _seq_parts(self, n_rows: int | None) -> int | None:
+    def _seq_parts(self, n_rows: int) -> int:
         """Bucket count for a dense-seq shuffle sized to the KNOWN row
         count (from this round's Observations): ~50k rows/bucket, capped
-        at the configured shuffle width. None (count unknown — the
-        >_OBS_MAX_TASKS fallback) keeps the configured default."""
-        if n_rows is None:
-            return None
+        at the configured shuffle width."""
         return max(1, min(self.shuffle_parts, -(-n_rows // 50_000)))
+
+    def _task_sums(self, kind: str, cond=None) -> list:
+        """Observation expressions ``{kind}::{task}``: per configured task,
+        the number of rows of that task (that also satisfy ``cond``)."""
+        out = []
+        for t in self.tasks:
+            hit = F.col("task") == t
+            if cond is not None:
+                hit = hit & cond
+            out.append(F.sum(F.when(hit, 1)).alias(f"{kind}::{t}"))
+        return out
+
+    def _task_counts(self, metrics: dict, kind: str) -> dict[str, int]:
+        """The nonzero ``{kind}::{task}`` counts of an Observation's metrics
+        (tasks without rows are left out, as in the metrics table)."""
+        return {
+            t: int(metrics[f"{kind}::{t}"])
+            for t in self.tasks
+            if metrics.get(f"{kind}::{t}")
+        }
 
     def _scratch(self, df, rnd: int, name: str):
         """Materialize a hot round frame via a scratch-parquet roundtrip.
@@ -363,11 +400,11 @@ class CrawlEngine:
         O(1) to analyze. The alternatives both lose: .cache() keeps the
         full expression lineage in every consumer's LOGICAL plan, and the
         CacheManager re-canonicalizes that tree per referencing job for
-        cache matching (measured ~4s of driver time just to PLAN the
-        8-branch accounting job — a per-round constant that caps N->4N
-        scaling); .localCheckpoint() cuts the plan but stores object rows,
-        losing column pruning + Tungsten format (measured 6x slower on a
-        400k fat wave). At production scale these scratch frames are the
+        cache matching (measured ~4s of driver time just to PLAN one
+        multi-branch job over the round's frames — a per-round constant
+        that caps N->4N scaling); .localCheckpoint() cuts the plan but
+        stores object rows, losing column pruning + Tungsten format
+        (measured 6x slower on a 400k fat wave). At production scale these scratch frames are the
         per-round working tables next to the Iceberg frontier snapshots.
         """
         path = os.path.join(self.store.root, "scratch", f"r{rnd:05d}", name)
@@ -522,7 +559,7 @@ class CrawlEngine:
         # what to write, or read_through would see it forever
         self.store.clean_round(rnd)
         self._drop_scratch(rnd)
-        fr_round = man.get("frontier_round", prev)
+        fr_round = man["frontier_round"]
         fr_base = man.get("frontier_base")
         if fr_base is not None:
             # lazy GC of deltas folded into the committed base (safe only
@@ -543,7 +580,7 @@ class CrawlEngine:
         # probe, or deferred∪retries of a unique wave with no new links —
         # all disjoint subsets of an already-deduped candidate set)
         frontier_unique = bool(man.get("frontier_unique"))
-        n_failed_once = man.get("failed_once_count")
+        n_failed_once = man["failed_once_count"]
 
         # dynamic seeds queued by run_task: seq-stamped here, AFTER the
         # previous round's links/retries (manifest max_seq), so queue
@@ -575,7 +612,6 @@ class CrawlEngine:
             name: task_budget(carries[name], list(t.limits), self.round_s)
             for name, t in self.tasks.items()
         }
-        use_obs = len(self.tasks) <= _OBS_MAX_TASKS
         # FUSED identity round: the manifest's per-task frontier counts
         # (known arithmetically when the frontier was built) prove every
         # task's candidate set fits its budget — expire/dedup only ever
@@ -586,11 +622,9 @@ class CrawlEngine:
         # parse -> parsed-delta write, and all round counts ride its
         # Observations. This is the steady-state fat-wave shape (a 10^10-URL
         # frontier round is budget-unbound most rounds).
-        fcounts_prev = man.get("frontier_counts")
+        fcounts_prev = man["frontier_counts"]
         fused = (
-            use_obs
-            and fcounts_prev is not None
-            and not self._hostcap_active
+            not self._hostcap_active
             and all(
                 n + pending_counts.get(t, 0) <= budgets.get(t, 1 << 40)
                 for t, n in fcounts_prev.items()
@@ -604,9 +638,7 @@ class CrawlEngine:
         # seen-dedup inputs, needed by the candidate filters below AND the
         # pruned-pop widening loop. Seen size is a manifest counter
         # (appended rows), never a table scan.
-        n_seen = man.get("seen_count")
-        if n_seen is None:  # manifest written before the counter existed
-            n_seen = seen.count()
+        n_seen = man["seen_count"]
 
         def _cand_filters(fr: DataFrame) -> DataFrame:
             # 1. expire (Request.Check semantics)
@@ -642,8 +674,7 @@ class CrawlEngine:
         # cannot substitute in the pop order), widen any short task, redo.
         # Gates: frontier_unique (no cross-row dedup => candidate filters
         # are row-local), no queued seeds, no host cap (host budgets are
-        # not task-prefix-coverable), observation accounting, and a
-        # bucketed base in the manifest.
+        # not task-prefix-coverable), and a bucketed base in the manifest.
         self._last_prune = None
         pruned_partial = False
         bmeta = (
@@ -654,11 +685,9 @@ class CrawlEngine:
         if (
             bmeta
             and not fused
-            and use_obs
             and frontier_unique
             and not stamped_seed_rows
             and not self._hostcap_active
-            and fcounts_prev is not None
             and fr_base is not None
         ):
             targets = {
@@ -747,13 +776,11 @@ class CrawlEngine:
             else:
                 deduped = deduped.select("key", "r.*")
         # Per-task round counts ride the round's WRITE jobs as Observation
-        # metrics — computed inside jobs the round already runs, so the
-        # old 8-branch accounting job (6 extra pruned scans of the scratch
-        # frames + their job latencies, a per-round constant that caps
-        # N->4N scaling) shrinks to the one link/retry count job below.
-        # Tasks are a config-scale dim (a handful of presets, like rules —
-        # never data-scale like hosts), so #exprs = O(#tasks) is bounded;
-        # _OBS_MAX_TASKS guards the assumption.
+        # metrics — computed inside jobs the round already runs (cand/wave
+        # scratch writes, the parsed-delta write), so they cost no extra
+        # scans and no extra jobs. Tasks are a config-scale dim (a handful
+        # of presets, like rules — never data-scale like hosts), so
+        # #exprs = O(#tasks) is bounded; __init__ enforces _MAX_TASKS.
         self._desc(rnd, "cand(expire+dedup)")
         if frontier_unique:
             cand_in = deduped  # reload-free by the same proof
@@ -766,21 +793,14 @@ class CrawlEngine:
             cand_in = deduped.unionByName(
                 reload_branch.select(*deduped.columns)
             )
-        obs_cand = None
-        cand_counts: dict[str, int] | None = None
-        if use_obs:
-            obs_cand = Observation()
-            cand_in = cand_in.observe(
-                obs_cand,
-                F.count(F.lit(1)).alias("n"),
-                # reload rows bypass dedup, so only a reload-free candidate
-                # set proves the NEXT frontier key-unique (flag propagation)
-                F.sum(F.col("reload").cast("int")).alias("nreload"),
-                *[
-                    F.sum(F.when(F.col("task") == t, 1)).alias(f"t::{t}")
-                    for t in self.tasks
-                ],
-            )
+        obs_cand = Observation()
+        cand_in = cand_in.observe(
+            obs_cand,
+            # reload rows bypass dedup, so only a reload-free candidate
+            # set proves the NEXT frontier key-unique (flag propagation)
+            F.sum(F.col("reload").cast("int")).alias("nreload"),
+            *self._task_sums("cand"),
+        )
         dedup_losers = None  # delta mode: same-key non-winners to tombstone
         if fused:
             # no scratch, no barrier: the candidate plan IS the wave and
@@ -793,8 +813,6 @@ class CrawlEngine:
                 wave = wave.repartition(
                     self.shuffle_parts, F.xxhash64("host", "key")
                 )
-            n_cand = n_wave = None
-            used = None
         else:
             cand = self._scratch(cand_in, rnd, "cand")
             if "_lseqs" in cand.columns:
@@ -802,38 +820,25 @@ class CrawlEngine:
                     F.explode("_lseqs").alias("seq")
                 )
                 cand = cand.drop("_lseqs")
-            if use_obs:
-                cand_m = obs_cand.get
-                n_cand = int(cand_m["n"] or 0)
-                # per-task candidate counts, free by-product of the scratch
-                # write — lets the task-budget topk skip its own counts job
-                cand_counts = {
-                    t: int(cand_m[f"t::{t}"] or 0)
-                    for t in self.tasks
-                    if cand_m[f"t::{t}"]
-                }
-            else:
-                n_cand = cand.count()  # parquet footer count — no data scan
+            # per-task candidate counts, free by-product of the scratch
+            # write — lets the task-budget topk skip its own counts job
+            cand_counts = self._task_counts(obs_cand.get, "cand")
+            n_cand = sum(cand_counts.values())
 
             # 3-4. budget top-k per task, then host-cap pass
             self._desc(rnd, "wave(topk)")
             # identity fast path (the measured-counts variant of the fused
-            # proof, for rounds whose manifest lacked frontier counts —
-            # e.g. first round after resume from an older store): the
-            # cand-scratch Observation proved every task's candidate count
-            # fits its budget and no host cap is active, so the budgeted
-            # top-k is a no-op filter. Reuse the cand scratch as the wave.
-            identity_wave = (
-                cand_counts is not None
-                and not self._hostcap_active
-                and all(
-                    n <= budgets.get(t, 1 << 40)
-                    for t, n in cand_counts.items()
-                )
+            # proof): the manifest's frontier counts are taken before
+            # expire/dedup, so they can exceed a budget while the measured
+            # candidate counts still fit. When the cand-scratch Observation
+            # proves every task's candidate count fits its budget and no
+            # host cap is active, the budgeted top-k is a no-op filter —
+            # reuse the cand scratch as the wave.
+            identity_wave = not self._hostcap_active and all(
+                n <= budgets.get(t, 1 << 40) for t, n in cand_counts.items()
             )
             if identity_wave:
                 wave = cand
-                n_wave = n_cand
                 used = dict(cand_counts)
             else:
                 picked = budgeted_topk(
@@ -855,55 +860,18 @@ class CrawlEngine:
                     wave_in = wave.repartition(
                         self.shuffle_parts, F.xxhash64("host", "key")
                     )
-                obs_wave = None
-                if use_obs:
-                    obs_wave = Observation()
-                    wave_in = wave_in.observe(
-                        obs_wave,
-                        F.count(F.lit(1)).alias("n"),
-                        *[
-                            F.sum(F.when(F.col("task") == t, 1)).alias(f"t::{t}")
-                            for t in self.tasks
-                        ],
-                    )
+                obs_wave = Observation()
+                wave_in = wave_in.observe(obs_wave, *self._task_sums("wave"))
                 wave = self._scratch(wave_in, rnd, "wave")
-                if use_obs:
-                    wave_m = obs_wave.get
-                    n_wave = int(wave_m["n"] or 0)
-                    used = {
-                        t: int(wave_m[f"t::{t}"] or 0)
-                        for t in self.tasks
-                        if wave_m[f"t::{t}"]
-                    }
-                else:
-                    n_wave = used = None  # grouped-count fallback fills these
-
-        # all-deferred round, observation mode: known BEFORE fetch/parse —
-        # budgets accrue, frontier unchanged, zero further jobs this round.
-        # (Never reached fused: fused proves counts <= budgets, so a zero
-        # wave implies a zero frontier, which set `done` last round.)
-        if use_obs and not fused:
-            if n_wave == 0:
-                for name, t in self.tasks.items():
-                    carries[name] = [
-                        tier_carry_after(c, tier, self.round_s, 0)
-                        for c, tier in zip(carries[name], t.limits)
-                    ]
-                # pruned n_cand counts only the read prefix — emptiness of
-                # the prefix proves nothing about the unread buckets
-                done = n_cand == 0 and not pruned_partial
-                new_man = self._advance_manifest(
-                    man, rnd, carries, used, max_seq, done, n_seen,
-                    frontier_counts=fcounts_prev,
+                used = self._task_counts(obs_wave.get, "wave")
+            if not used:
+                # all-deferred round, known BEFORE fetch/parse. A pruned
+                # n_cand counts only the read prefix — emptiness of the
+                # prefix proves nothing about the unread buckets.
+                return self._commit_idle(
+                    man, rnd, carries, n_cand == 0 and not pruned_partial,
+                    stamped_seed_rows, t0,
                 )
-                new_man["frontier_round"] = man.get("frontier_round", prev)
-                new_man["stats"] = dict(
-                    round=rnd, selected=0, fetched_ok=0, failed=0,
-                    new_links=0, items=0, wall_s=time.time() - t0,
-                )
-                self.store.commit(rnd, new_man)
-                self._drop_scratch(rnd)
-                return new_man
 
         # 5-6. fetch + parse in ONE pass (seen marking is folded into the
         # post-fetch delta: mark-before-fetch + unmark-on-failure ≡ add iff
@@ -917,35 +885,21 @@ class CrawlEngine:
         # column-prunes that flat parquet scan.
         self._desc(rnd, "fetch+parse")
         fetched = self.fetcher.fetch(wave)
-        obs_parsed = None
+        obs_parsed = Observation()
 
         def _persist_parsed(df: DataFrame) -> DataFrame:
-            nonlocal obs_parsed
-            if use_obs:
-                obs_parsed = Observation()
-                exprs = []
-                for t in self.tasks:
-                    is_t = F.col("task") == t
-                    ok = F.col("ok")
-                    exprs += [
-                        F.sum(F.when(is_t & ok, 1)).alias(f"ok::{t}"),
-                        F.sum(F.when(is_t & ~ok, 1)).alias(f"fail::{t}"),
-                        F.sum(
-                            F.when(is_t & (ok | F.col("reload")), 1)
-                        ).alias(f"seen::{t}"),
-                        F.sum(
-                            F.when(is_t & ok & F.col("_p.item").isNotNull(), 1)
-                        ).alias(f"item::{t}"),
-                    ]
+            ok = F.col("ok")
+            df = df.observe(
+                obs_parsed,
+                *self._task_sums("ok", ok),
+                *self._task_sums("fail", ~ok),
+                *self._task_sums("item", ok & F.col("_p.item").isNotNull()),
+                F.sum(F.when(ok | F.col("reload"), 1)).alias("nseen"),
                 # total raw link matches — proves the link/retry machinery
                 # (canonicalize, robots, seq prep, count job) can be skipped
-                # when the wave discovered nothing and nothing failed
-                exprs.append(
-                    F.sum(
-                        F.when(F.col("ok"), F.size(F.col("_p.l_url")))
-                    ).alias("nlinks")
-                )
-                df = df.observe(obs_parsed, *exprs)
+                # when the wave discovered nothing
+                F.sum(F.when(ok, F.size(F.col("_p.l_url")))).alias("nlinks"),
+            )
             # the write-once barrier: parsed IS a store table (round delta),
             # not scratch — documents derive from it at read time. The
             # basePath partition read supplies `round`, so no round column
@@ -971,29 +925,39 @@ class CrawlEngine:
         # wave/candidate counts arrive (the Observation rode the fused job,
         # attached below the fetch join).
         if fused:
-            cand_m = obs_cand.get
-            n_cand = int(cand_m["n"] or 0)
-            cand_counts = {
-                t: int(cand_m[f"t::{t}"] or 0)
-                for t in self.tasks
-                if cand_m[f"t::{t}"]
-            }
+            cand_counts = self._task_counts(_observed(obs_cand), "cand")
+            n_cand = sum(cand_counts.values())
             used = dict(cand_counts)
-            n_wave = n_cand
+            if not used:
+                # every candidate expired (e.g. all under closed tasks):
+                # fused proves counts <= budgets, so an empty wave means an
+                # empty candidate set and the crawl is done
+                return self._commit_idle(
+                    man, rnd, carries, True, stamped_seed_rows, t0
+                )
+        n_wave = sum(used.values())
+        for name, t in self.tasks.items():
+            carries[name] = [
+                tier_carry_after(c, tier, self.round_s, used.get(name, 0))
+                for c, tier in zip(carries[name], t.limits)
+            ]
+        pm = obs_parsed.get
+        ok_counts = self._task_counts(pm, "ok")
+        fail_counts = self._task_counts(pm, "fail")
+        item_counts = self._task_counts(pm, "item")
+        n_ok = sum(ok_counts.values())
+        n_failed = sum(fail_counts.values())
+        n_items = sum(item_counts.values())
+        n_seen_delta = int(pm["nseen"] or 0)
+        n_links_raw = int(pm["nlinks"] or 0)
         # The parsed Observation also proves emptiness per side: a wave
         # with zero raw links (the steady-state leaf-page shape) skips the
         # whole link pipeline (canonicalize, robots, seq prep, counts); a
         # wave with zero failures skips the retry pipeline. Each side gates
         # independently — hazard pages make failures nonzero on most real
         # waves while leaf waves still discover nothing.
-        skip_links = skip_retries = False
-        n_links_raw = n_failed_obs = None
-        if use_obs:
-            pm = obs_parsed.get
-            n_links_raw = int(pm["nlinks"] or 0)
-            n_failed_obs = sum(int(pm[f"fail::{t}"] or 0) for t in self.tasks)
-            skip_links = n_links_raw == 0
-            skip_retries = n_failed_obs == 0
+        skip_links = n_links_raw == 0
+        skip_retries = n_failed == 0
 
         links_prep = retries_prep = permanent = None
         if not skip_retries:
@@ -1008,7 +972,7 @@ class CrawlEngine:
             retries_prep = prepare_dense_seq(
                 retries_base.withColumnRenamed("seq", "_oseq"), ["_oseq"],
                 bound=max_seq,
-                n_parts=self._seq_parts(n_failed_obs),
+                n_parts=self._seq_parts(n_failed),
             )
         if not skip_links:
             links = with_canonical(
@@ -1034,148 +998,35 @@ class CrawlEngine:
 
             # 9. seq assignment, fused (operators/seq.py): prepare the
             # range-partitioned, id-tagged frames here (cached, still lazy);
-            # their per-partition counts ride the accounting union below and
+            # their per-slice counts ride the accounting job below and
             # finalize_dense_seq attaches the dense seqs with no extra barrier.
             links_prep = prepare_dense_seq(
                 links, ["parent_seq", "match_idx"], bound=max_seq,
                 n_parts=self._seq_parts(n_links_raw),
             )
 
-        # ---- accounting. With observations (the common path) every
-        # per-task count was already computed INSIDE the scratch-write jobs
-        # (cand/wave/parsed Observation metrics — no extra scans, no extra
-        # jobs); the only remaining job is the link/retry (task, pid) count,
-        # which doubles as the dense-seq offset source and the links_prep /
-        # retries_prep cache materialization. 'selected' (politeness 'used')
-        # still counts the WAVE, not the fetch-join output, so a fetcher
-        # returning duplicate rows can never inflate the carries. The
-        # fallback path (>_OBS_MAX_TASKS tasks) rides everything in one
-        # 8-branch union job over the scratch scans, as before.
-        self._desc(rnd, "accounting")
-
-        def _kind(df: DataFrame, k: str) -> DataFrame:
-            return df.select(
-                F.lit(k).alias("kind"),
-                F.col("task").alias("k2a"),
-                F.lit("").alias("k2b"),
-            )
-
-        def _kind_pid(df: DataFrame, k: str) -> DataFrame:
-            return df.select(
-                F.lit(k).alias("kind"),
-                F.col("task").alias("k2a"),
-                rank_key_col(df).cast("string").alias("k2b"),
-            )
-
-        cnt: dict[str, dict[tuple[str, str], int]] = {}
-
-        def _ingest(rows) -> None:
-            for r in rows:
-                cnt.setdefault(r["kind"], {})[(r["k2a"], r["k2b"])] = r["count"]
-
-        def by_task(kind: str) -> dict[str, int]:
-            out: dict[str, int] = {}
-            for (a, _), c in cnt.get(kind, {}).items():
-                out[a] = out.get(a, 0) + c
-            return out
-
-        def by_pid(kind: str) -> dict[int, int]:
-            out: dict[int, int] = {}
-            for (_, b), c in cnt.get(kind, {}).items():
-                out[int(b)] = out.get(int(b), 0) + c
-            return out
-
-        if use_obs:
-            # reading an Observation blocks only until its write job ran
-            # (they all have, above); zero-count tasks are dropped to match
-            # the grouped-count shape (metrics emit only participating
-            # tasks). wave_m/used/n_wave were read right after the wave
-            # scratch write (the all-deferred early return); pm was read
-            # for the skip_lr decision.
-            parsed_m = pm
-            for kind in ("ok", "fail", "seen", "item"):
-                cnt[kind] = {
-                    (t, ""): int(parsed_m[f"{kind}::{t}"] or 0)
-                    for t in self.tasks
-                    if parsed_m[f"{kind}::{t}"]
-                }
-        else:
-            _ingest(
-                _kind(cand, "cand")
-                .unionByName(_kind(wave, "selected"))
-                .unionByName(_kind(parsed.filter(F.col("ok")), "ok"))
-                .unionByName(_kind(parsed.filter(~F.col("ok")), "fail"))
-                .unionByName(
-                    _kind(parsed.filter(F.col("ok") | F.col("reload")), "seen")
-                )
-                .unionByName(_kind(items, "item"))
-                .unionByName(_kind_pid(links_prep, "link"))
-                .unionByName(_kind_pid(retries_prep, "retry"))
-                .groupBy("kind", "k2a", "k2b")
-                .count()
-                .collect()
-            )
-            n_cand = sum(by_task("cand").values())
-            used = by_task("selected")
-            n_wave = sum(used.values())
-        for name, t in self.tasks.items():
-            carries[name] = [
-                tier_carry_after(c, tier, self.round_s, used.get(name, 0))
-                for c, tier in zip(carries[name], t.limits)
-            ]
-
-        if n_wave == 0:
-            # all-deferred round: budgets accrue, frontier unchanged — no
-            # writes at all; the manifest keeps pointing at the last
-            # materialized frontier snapshot
-            done = n_cand == 0
-            new_man = self._advance_manifest(
-                man, rnd, carries, used, max_seq, done, n_seen,
-                frontier_counts=fcounts_prev,
-            )
-            new_man["frontier_round"] = man.get("frontier_round", prev)
-            new_man["stats"] = dict(
-                round=rnd, selected=0, fetched_ok=0, failed=0, new_links=0,
-                items=0, wall_s=time.time() - t0,
-            )
-            self.store.commit(rnd, new_man)
-            for df in (links_prep, retries_prep):
-                if df is not None:
-                    df.unpersist()
-            self._drop_scratch(rnd)
-            return new_man
-
-        # links/retries (task, slice) counts: the one remaining accounting
-        # job in observation mode — skipped entirely on all-deferred rounds
-        # (above); each proven-empty side (skip_links / skip_retries) stays
-        # out of the union. The job also materializes whichever prep caches
-        # the frontier build will read. It is DEFERRED into the write phase
+        # ---- accounting. Every per-task count above came from the round's
+        # Observations; the one accounting job is the link/retry
+        # (kind, task, slice) count, which doubles as the dense-seq offset
+        # source and the links_prep / retries_prep cache materialization.
+        # 'selected' (politeness 'used') counts the WAVE, not the fetch-join
+        # output, so a fetcher returning duplicate rows can never inflate
+        # the carries. Each proven-empty side (skip_links / skip_retries)
+        # stays out of the union. The job is DEFERRED into the write phase
         # below (run concurrently with the independent delta writes, which
         # need only the parsed-Observation counts already in hand).
+        self._desc(rnd, "accounting")
         counted = None
-        if use_obs and not (skip_links and skip_retries):
-            parts = []
-            if not skip_links:
-                parts.append(_kind_pid(links_prep, "link"))
-            if not skip_retries:
-                parts.append(_kind_pid(retries_prep, "retry"))
-            counted = parts[0]
-            for p in parts[1:]:
-                counted = counted.unionByName(p)
+        for prep, kind in ((links_prep, "link"), (retries_prep, "retry")):
+            if prep is not None:
+                part = prep.select(
+                    F.lit(kind).alias("kind"), "task",
+                    rank_key_col(prep).alias("pid"),
+                )
+                counted = part if counted is None else counted.unionByName(part)
 
         frontier_cols = schemas.FRONTIER.fieldNames()
         empty_frontier = local_frame(spark, [], schemas.FRONTIER)
-
-        ok_counts = by_task("ok")
-        fail_counts = by_task("fail")
-        item_counts = by_task("item")
-        n_seen_delta = sum(by_task("seen").values())
-        totals = {
-            "selected": n_wave,
-            "fetched_ok": sum(ok_counts.values()),
-            "failed": sum(fail_counts.values()),
-            "items": sum(item_counts.values()),
-        }
 
         # ---- writes (appends, frontier snapshot, then commit). Empty
         # deltas are skipped entirely — read_through tolerates missing round
@@ -1202,12 +1053,12 @@ class CrawlEngine:
         writes: list[tuple[str, object]] = []
         if n_seen_delta:
             writes.append(("seen", seen_delta.coalesce(n_slim)))
-        if totals["failed"]:
+        if n_failed:
             writes.append(("failed_once", failed.select("key").coalesce(n_slim)))
         # documents are NOT written: the parsed delta (written once in the
         # fetch+parse stage) is their durable source; state.py projects the
         # documents view from it at read time.
-        if totals["items"]:
+        if n_items:
             items_r = items.withColumn("round", F.lit(rnd))
             writes.append(
                 (
@@ -1267,10 +1118,16 @@ class CrawlEngine:
                 for table, df in writes
             ]
 
+            # kind -> (per-task count, per-slice count)
+            counts = {k: (Counter(), Counter()) for k in ("link", "retry")}
             if counted is not None:
-                _ingest(counted.groupBy("kind", "k2a", "k2b").count().collect())
-            link_counts = by_task("link")
-            retry_counts = by_task("retry")
+                for r in counted.groupBy("kind", "task", "pid").count().collect():
+                    by_task, by_slice = counts[r["kind"]]
+                    by_task[r["task"]] += r["count"]
+                    by_slice[r["pid"]] += r["count"]
+            (link_counts, link_slices), (retry_counts, retry_slices) = (
+                counts["link"], counts["retry"]
+            )
 
             if skip_links:
                 # proven-empty by the parsed Observation: no rescans, no
@@ -1280,7 +1137,7 @@ class CrawlEngine:
                 new_links = empty_frontier
             else:
                 # finalize dense seqs from the fused slice counts
-                links = finalize_dense_seq(links_prep, by_pid("link"), max_seq)
+                links = finalize_dense_seq(links_prep, link_slices, max_seq)
                 n_links = links._total
                 new_links = links.withColumn("attempt", F.lit(0)).select(
                     *frontier_cols
@@ -1291,7 +1148,7 @@ class CrawlEngine:
                 retries_f = empty_frontier
             else:
                 retries = finalize_dense_seq(
-                    retries_prep, by_pid("retry"), max_seq + n_links
+                    retries_prep, retry_slices, max_seq + n_links
                 )
                 n_retries = retries._total
                 retries = retries.drop("_oseq")
@@ -1320,8 +1177,6 @@ class CrawlEngine:
             if (
                 self.frontier_mode == "delta"
                 and not self._force_frontier_compact
-                and n_wave is not None
-                and eff_cand is not None
                 and n_wave != eff_cand
                 and man.get("frontier_raw") is not None
             ):
@@ -1404,7 +1259,7 @@ class CrawlEngine:
                 else:
                     next_frontier = empty_frontier.coalesce(1)
 
-            if totals["failed"] > n_retries:
+            if n_failed > n_retries:
                 futs.append(
                     pool.submit(
                         self._labeled, rnd, "write-deltas",
@@ -1479,9 +1334,7 @@ class CrawlEngine:
         # per-task next-frontier counts: deferred (cand - used) + links +
         # retries — all already known. They are next round's PROOF that the
         # budgeted top-k is the identity (the fused-round precondition).
-        cand_by_task = (
-            cand_counts if cand_counts is not None else by_task("cand")
-        )
+        cand_by_task = cand_counts
         if pruned_partial:
             # the pruned cand counted only the read prefix: advance the
             # manifest totals arithmetically instead (an upper bound on
@@ -1505,18 +1358,14 @@ class CrawlEngine:
         # links the next frontier is key-unique iff cand_in was — which
         # holds if this frontier was unique (cand_in ⊆ frontier) or the
         # dedup ran over a reload-free candidate set.
-        next_unique = bool(
-            skip_links
-            and (
-                frontier_unique
-                or (use_obs and int(cand_m["nreload"] or 0) == 0)
-            )
+        next_unique = skip_links and (
+            frontier_unique or not obs_cand.get["nreload"]
         )
         new_man = self._advance_manifest(
-            man, rnd, carries, used, max_seq + n_links + n_retries, done,
+            man, rnd, carries, max_seq + n_links + n_retries, done,
             n_seen + n_seen_delta, frontier_counts=fcounts_next,
             frontier_unique=next_unique,
-            failed_once_add=int(totals["failed"]),
+            failed_once_add=n_failed,
         )
         if self.frontier_mode == "delta":
             if delta_round:
@@ -1555,13 +1404,13 @@ class CrawlEngine:
         new_man["stats"] = dict(
             round=rnd,
             selected=n_wave,
-            fetched_ok=int(totals["fetched_ok"]),
-            failed=int(totals["failed"]),
+            fetched_ok=n_ok,
+            failed=n_failed,
             new_links=int(n_links),
-            items=int(totals["items"]),
+            items=n_items,
             wall_s=time.time() - t0,
         )
-        new_man["fetch_count"] = man.get("fetch_count", 0) + n_wave
+        new_man["fetch_count"] = man["fetch_count"] + n_wave
         self.store.commit(rnd, new_man)
         for df in (getattr(links, "_ranked", None),
                    getattr(retries, "_ranked", None)):
@@ -1570,23 +1419,52 @@ class CrawlEngine:
         self._drop_scratch(rnd)
         return new_man
 
+    def _commit_idle(
+        self, man: dict, rnd: int, carries: dict, done: bool,
+        seed_rows: list[dict], t0: float,
+    ) -> dict:
+        """Commit a round that fetched nothing: an all-deferred staged
+        round, or a fused round whose candidates all expired. Budgets
+        accrue unused and nothing but the manifest is written — it keeps
+        pointing at the last materialized frontier (and, in delta mode, at
+        the unchanged base + raw size). The round's queued seeds lived only
+        in its in-memory frontier, so they go back on the queue and the
+        next round stamps them with the same seqs (max_seq stays put)."""
+        self._pending_seeds = seed_rows
+        for name, t in self.tasks.items():
+            carries[name] = [
+                tier_carry_after(c, tier, self.round_s, 0)
+                for c, tier in zip(carries[name], t.limits)
+            ]
+        new_man = self._advance_manifest(
+            man, rnd, carries, man["max_seq"], done, man["seen_count"],
+            frontier_counts=man["frontier_counts"],
+        )
+        new_man["frontier_round"] = man["frontier_round"]
+        new_man["stats"] = dict(
+            round=rnd, selected=0, fetched_ok=0, failed=0, new_links=0,
+            items=0, wall_s=time.time() - t0,
+        )
+        self.store.commit(rnd, new_man)
+        self._drop_scratch(rnd)
+        return new_man
+
     def _advance_manifest(
         self,
         man: dict,
         rnd: int,
         carries: dict,
-        used: dict,
         max_seq: int,
         done: bool,
         seen_count: int,
-        frontier_counts: dict[str, int] | None = None,
+        frontier_counts: dict[str, int],
         frontier_unique: bool | None = None,
         failed_once_add: int = 0,
     ) -> dict:
         out = {
             "round": rnd,
             "max_seq": int(max_seq),
-            "fetch_count": man.get("fetch_count", 0),
+            "fetch_count": man["fetch_count"],
             "seen_count": int(seen_count),
             "frontier_round": rnd,
             "carries": carries,
@@ -1595,20 +1473,13 @@ class CrawlEngine:
             "frontier_unique": bool(man.get("frontier_unique"))
             if frontier_unique is None
             else bool(frontier_unique),
-            "failed_once_count": (
-                int(man.get("failed_once_count") or 0) + int(failed_once_add)
-            )
-            if man.get("failed_once_count") is not None
-            else None,
+            "failed_once_count": man["failed_once_count"] + failed_once_add,
+            "frontier_counts": {t: int(n) for t, n in frontier_counts.items()},
         }
-        if frontier_counts is not None:
-            out["frontier_counts"] = {
-                t: int(n) for t, n in frontier_counts.items()
-            }
         # delta-frontier bookkeeping rides through unchanged by default
-        # (the main write path overrides after advancing the view); the
-        # early-return paths (all-deferred / zero-wave rounds) leave the
-        # view — and therefore base + raw size — exactly as it was
+        # (the main write path overrides after advancing the view); an
+        # idle round (_commit_idle) leaves the view — and therefore base +
+        # raw size — exactly as it was
         if man.get("frontier_base") is not None:
             out["frontier_base"] = man.get("frontier_base")
             out["frontier_raw"] = man.get("frontier_raw")

@@ -43,8 +43,6 @@ parse/doubangroup/group.go) and the otto-JS rule scripts
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -234,28 +232,28 @@ def spans_col():
     )
 
 
-def parse_fetched(
-    fetched: DataFrame,
-    rules: list[Rule],
-    jvm: bool | None = None,
-    persist=None,
-):
+def parse_fetched(fetched: DataFrame, rules: list[Rule], persist):
     """Returns (parsed, documents, items, raw_links) DataFrames.
 
     ``fetched`` is the FULL fetch-join output (ok and failed rows). The
     returned ``parsed`` is the round's ONLY cache of fetch output: every
     slim column (frontier metadata, ok/status) plus the parse struct —
     but NOT the body. Failed rows pass through with NULL body (masked
-    below) and cost nothing in the UDF; all accounting (ok/failed/retry/
-    seen counts) reads this one columnar cache with column pruning, so no
-    body bytes are ever cached or rescanned.
+    below) and cost nothing in the UDF; every downstream consumer reads
+    this one columnar frame with column pruning, so no body bytes are ever
+    cached or rescanned.
 
-    ``jvm``: force (True) / forbid (False) the pure-codegen parse path
-    (operators/parse_jvm.py); default auto — use it whenever every rule is
-    in its domain. The JVM path keeps bodies out of Python entirely (the
-    Arrow transfer of the wave's bodies was the one stage that refused to
-    scale with cores); the pandas UDF remains the fallback and the parity
-    oracle (tests/test_parse_jvm.py pins byte-equality).
+    ``persist`` materializes the slim parse output ONCE and returns the
+    frame every downstream consumer (links/documents/items/accounting)
+    reads. The engine passes its parsed-delta store write + reread (a flat
+    columnar scan — prunable AND plan-size O(1); see CrawlEngine._scratch
+    for why cache()/localCheckpoint() both lose here).
+
+    The pure-codegen parse path (operators/parse_jvm.py) runs whenever
+    every rule is in its domain. It keeps bodies out of Python entirely
+    (the Arrow transfer of the wave's bodies was the one stage that
+    refused to scale with cores); the pandas UDF remains the fallback and
+    the parity oracle (tests/test_parse_jvm.py pins byte-equality).
 
     raw_links still carry the parent's depth/seq and the un-canonicalized
     URL; canonicalization, robots filtering, and seq assignment happen in
@@ -263,16 +261,8 @@ def parse_fetched(
     """
     from .parse_jvm import rules_jvm_ok, with_jvm_parse
 
-    if jvm is None:
-        env = os.environ.get("SPARK_GRAFT_JVM_PARSE")
-        if env is not None:
-            jvm = env not in ("0", "false", "no")
-        else:
-            jvm = rules_jvm_ok(rules)
-    if jvm:
-        jvm = rules_jvm_ok(rules)  # env can force OFF, never force past the domain check
     slim_cols = [c for c in fetched.columns if c != "body"]
-    if jvm:
+    if rules_jvm_ok(rules):
         parsed = with_jvm_parse(
             fetched, rules, b="if(ok, body, cast(null as string))"
         ).select(*slim_cols, "_p")
@@ -284,13 +274,7 @@ def parse_fetched(
                 "task", "rule", "curl", F.when(F.col("ok"), F.col("body")), "tmp"
             ).alias("_p"),
         )
-    # ``persist`` materializes the slim parse output ONCE and returns the
-    # frame every downstream consumer (links/documents/items/accounting)
-    # reads. The engine passes its scratch-parquet roundtrip (flat columnar
-    # scan — prunable AND plan-size O(1); see CrawlEngine._scratch for why
-    # cache()/localCheckpoint() both lose here). Default: columnar cache,
-    # for standalone/test callers that only fan out once.
-    parsed = persist(parsed) if persist is not None else parsed.cache()
+    parsed = persist(parsed)
     ok_rows = parsed.filter(F.col("ok"))
 
     documents = ok_rows.select(

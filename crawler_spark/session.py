@@ -44,8 +44,9 @@ def get_spark(
         # AQE re-plans fire a SparkListenerSQLAdaptiveExecutionUpdate whose
         # payload is the FULL pretty-printed physical plan; with this
         # engine's wide per-round plans (parse rule CASEs, canon bindings,
-        # the 8-branch accounting union) the driver was measured spending
-        # most of a fat round inside TreeNode.generateTreeString — per
+        # one Observation expression per task and count) the driver was
+        # measured spending most of a fat round inside
+        # TreeNode.generateTreeString — per
         # query stage, per job, independent of cluster size. Capping the
         # plan-string length bounds that cost; explain() output for humans
         # truncates past 256 KiB, which no debugging session ever reads.

@@ -13,9 +13,10 @@ same protocol is realized on plain parquet:
   assembles base ∪ adds minus dels, and the base is rewritten only when
   the raw/live ratio crosses a threshold (rewrite_data_files analog) — so
   steady-state per-round frontier I/O is O(wave+links), not O(frontier);
-- monotone state (``seen``, ``failed_once``) and outputs (``documents``,
+- monotone state (``seen``, ``failed_once``) and outputs (``parsed``,
   ``results``, ``order``, ``metrics``, ``failures``, ``lineage``) are
   append-only, written under ``<table>/round=N/`` — Iceberg appends;
+  ``documents`` is a view over ``parsed``, never a table of its own;
 - a round is visible only after its ``commit.json`` (written via tmp+rename,
   atomic on POSIX) exists. Resume = max committed round; uncommitted
   round directories are ignored and overwritten, which is exactly
@@ -62,7 +63,6 @@ class SnapshotStore:
         "seen",
         "failed_once",
         "parsed",
-        "documents",
         "results",
         "order",
         "metrics",
@@ -368,49 +368,35 @@ class SnapshotStore:
         frame as both its materialization barrier and the durable output;
         writing a separate documents table doubled the round's largest
         write). Iceberg analog: a view (or partition-projected metadata
-        table) over the parsed snapshots. Falls back to a materialized
-        documents table for stores written before this layout (and for
-        compacted bases)."""
+        table) over the parsed snapshots. A compacted parsed base keeps
+        the deltas' ``ok=`` partition layout (see compact), so the view
+        reads it unchanged."""
         from pyspark.sql import functions as F
 
         from .operators.parse import spans_col
 
-        out = None
         base = os.path.join(self.root, "parsed")
-        if os.path.isdir(base):
-            dirs = [
-                os.path.join(base, d)
-                for d in os.listdir(base)
-                if d.startswith("round=") and int(d.split("=")[1]) <= rnd
-            ]
-            if dirs:
-                out = (
-                    self.spark.read.option("basePath", base)
-                    .parquet(*dirs)
-                    # `ok` is a PARTITION column of the parsed delta
-                    # (discovered as string); the equality filter still
-                    # prunes at file-listing level
-                    .filter(F.col("ok").cast("boolean"))
-                    .select(
-                        F.col("curl").alias("doc_id"),
-                        spans_col().alias("spans"),
-                        "round",
-                    )
-                )
-        legacy = os.path.join(self.root, "documents")
-        if os.path.isdir(legacy):
-            dirs = [
-                os.path.join(legacy, d)
-                for d in os.listdir(legacy)
-                if d.startswith("round=") and int(d.split("=")[1]) <= rnd
-            ]
-            if dirs:
-                mat = self.spark.read.option("basePath", legacy).parquet(*dirs)
-                if "round" not in mat.columns:
-                    mat = mat.withColumn("round", F.lit(None).cast("int"))
-                mat = mat.select("doc_id", "spans", "round")
-                out = mat if out is None else out.unionByName(mat)
-        return out
+        if not os.path.isdir(base):
+            return None
+        dirs = [
+            os.path.join(base, d)
+            for d in os.listdir(base)
+            if d.startswith("round=") and int(d.split("=")[1]) <= rnd
+        ]
+        if not dirs:
+            return None
+        return (
+            self.spark.read.option("basePath", base)
+            .parquet(*dirs)
+            # `ok` is a PARTITION column of the parsed delta (discovered as
+            # string); the equality filter still prunes at file-listing level
+            .filter(F.col("ok").cast("boolean"))
+            .select(
+                F.col("curl").alias("doc_id"),
+                spans_col().alias("spans"),
+                "round",
+            )
+        )
 
     def commit(self, rnd: int, manifest: dict) -> None:
         os.makedirs(self._round_dir(rnd), exist_ok=True)
