@@ -605,23 +605,23 @@ STEADY_SIZES = [
 
 def run_steady_state_bench(spark) -> dict:
     """Steady-state (wave << frontier) round-cost evidence for the north
-    rule's central claim: in DELTA frontier mode a budget-bound round's
-    cost is O(wave + links), not O(frontier).
+    rule's central claim: over the merge-on-read frontier a budget-bound
+    round's cost is O(wave + links), not O(frontier).
 
     Protocol: fixed wave budget W per round, frontier sizes S spanning a
     16x range (W << S for all of them), R rounds per run, per-round wall
     times from RoundStats. The fetched corpus (R*W detail pages — the only
     pages any run pops, since pops are (-priority, seq) and the fat
     frontier is seq-ordered) is rendered once and shared by every run, so
-    the only thing that varies between runs is frontier size and mode.
+    the only thing that varies between runs is frontier size.
     Round 1 is reported but excluded from the steady figure (JIT/codegen
     warmup); steady_round_s = MIN over rounds 2..R (the same
     additive-noise floor estimator as the scaling protocol).
 
-    Read: delta's growth ratio steady(S_max)/steady(S_min) vs snapshot's.
-    Snapshot rewrites O(S) rows per round, so its ratio tracks the 16x
-    size ratio; delta appends O(W) and should stay near flat — the gap IS
-    the merge-on-read design working.
+    Read: the growth ratio steady(S_max)/steady(S_min). A round appends
+    O(W) rows and reads a pruned O(W) prefix of the base, so the ratio
+    should stay near flat against the 16x size ratio (a full rewrite per
+    round tracked it: BENCH/BASELINE.md keeps that contrast).
     """
     import shutil
 
@@ -652,39 +652,36 @@ def run_steady_state_bench(spark) -> dict:
         "rounds": STEADY_ROUNDS,
         "sizes": STEADY_SIZES,
     }
+    per_size = {}
     try:
-        for mode in ("delta", "snapshot"):
-            per_size = {}
-            for size in STEADY_SIZES:
-                d = _state_tmpdir("bench_steady_")
-                try:
-                    eng = CrawlEngine(
-                        spark, f"{d}/state", GraphFetcher(web), tasks, rules,
-                        robots, round_s=60, frontier_mode=mode,
-                    )
-                    eng.init_state(fat_frontier(spark, size))
-                    stats = eng.run(max_rounds=STEADY_ROUNDS)
-                    rounds = [s.wall_s for s in stats]
-                    tail = rounds[1:] or rounds
-                    # min over post-warmup rounds: host interference noise
-                    # is strictly additive and round 1 carries JIT/codegen
-                    # warmup, so min is the consistent floor estimator —
-                    # the same logic as the scaling protocol's min-over-runs
-                    per_size[str(size)] = {
-                        "round_s": [round(r, 2) for r in rounds],
-                        "steady_round_s": round(min(tail), 2),
-                        "urls_fetched": sum(s.selected for s in stats),
-                    }
-                finally:
-                    shutil.rmtree(d, ignore_errors=True)
-            lo = per_size[str(min(STEADY_SIZES))]["steady_round_s"]
-            hi = per_size[str(max(STEADY_SIZES))]["steady_round_s"]
-            out[mode] = {
-                "per_size": per_size,
-                "growth_ratio": round(hi / lo, 3) if lo else None,
-            }
+        for size in STEADY_SIZES:
+            d = _state_tmpdir("bench_steady_")
+            try:
+                eng = CrawlEngine(
+                    spark, f"{d}/state", GraphFetcher(web), tasks, rules,
+                    robots, round_s=60,
+                )
+                eng.init_state(fat_frontier(spark, size))
+                stats = eng.run(max_rounds=STEADY_ROUNDS)
+                rounds = [s.wall_s for s in stats]
+                tail = rounds[1:] or rounds
+                # min over post-warmup rounds: host interference noise is
+                # strictly additive and round 1 carries JIT/codegen warmup,
+                # so min is the consistent floor estimator — the same logic
+                # as the scaling protocol's min-over-runs
+                per_size[str(size)] = {
+                    "round_s": [round(r, 2) for r in rounds],
+                    "steady_round_s": round(min(tail), 2),
+                    "urls_fetched": sum(s.selected for s in stats),
+                }
+            finally:
+                shutil.rmtree(d, ignore_errors=True)
     finally:
         shutil.rmtree(corpus_dir, ignore_errors=True)
+    lo = per_size[str(min(STEADY_SIZES))]["steady_round_s"]
+    hi = per_size[str(max(STEADY_SIZES))]["steady_round_s"]
+    out["per_size"] = per_size
+    out["growth_ratio"] = round(hi / lo, 3) if lo else None
     out["size_ratio"] = round(max(STEADY_SIZES) / min(STEADY_SIZES), 1)
     _append_steady_md(out)
     return out
@@ -709,20 +706,16 @@ def _append_steady_md(steady: dict) -> None:
         f"codegen warmup; host interference noise is strictly additive, "
         f"so min is the consistent floor estimator — same logic as the "
         f"scaling protocol's min-over-runs). "
-        f"North-rule claim under test: delta-mode round cost is "
+        f"North-rule claim under test: merge-on-read round cost is "
         f"O(wave+links), independent of frontier size.\n\n",
-        "| mode | " + " | ".join(f"S={s}" for s in steady["sizes"]) +
+        "| " + " | ".join(f"S={s}" for s in steady["sizes"]) +
         f" | growth over {steady['size_ratio']}x |\n",
-        "|---|" + "---|" * (len(steady["sizes"]) + 1) + "\n",
-    ]
-    for mode in ("delta", "snapshot"):
-        if mode not in steady:
-            continue
-        cells = " | ".join(
-            f"{steady[mode]['per_size'][str(s)]['steady_round_s']} s"
+        "|" + "---|" * (len(steady["sizes"]) + 1) + "\n",
+        "| " + " | ".join(
+            f"{steady['per_size'][str(s)]['steady_round_s']} s"
             for s in steady["sizes"]
-        )
-        lines.append(f"| {mode} | {cells} | {steady[mode]['growth_ratio']}x |\n")
+        ) + f" | {steady['growth_ratio']}x |\n",
+    ]
     with open(path, "a") as f:
         f.writelines(lines)
 

@@ -28,7 +28,7 @@ Per-round driver work is kept O(|wave|), never O(|seen|):
   (no extra jobs or scans; the one accounting job is the link/retry
   (task, pid) count that doubles as the dense-seq offset source), and the
   next-frontier size is derived arithmetically instead of re-scanning the
-  written snapshot.
+  written frontier.
 """
 
 from __future__ import annotations
@@ -129,7 +129,7 @@ def _merge_consumed(bmeta: dict, wave_bkts) -> dict:
             t: dict(d) for t, d in bmeta.get("consumed", {}).items()
         },
     }
-    for r in wave_bkts or []:
+    for r in wave_bkts:
         d = out["consumed"].setdefault(r["task"], {})
         k = f"{r['priority']}:{r['_pbkt']}"
         d[k] = d.get(k, 0) + int(r["count"])
@@ -238,7 +238,7 @@ class CrawlEngine:
         round_s: int = 60,
         bloom_min_seen: int = 50_000,
         typed_tables: bool = False,
-        frontier_mode: str = "snapshot",
+        frontier_mode: str = "delta",
         frontier_compact_factor: float = 2.0,
         frontier_bucket_rows: int = 65536,
         revisit_plan=None,
@@ -252,34 +252,33 @@ class CrawlEngine:
             )
         # ``bloom_min_seen`` is accepted and ignored: the seen prefilter it
         # configured was removed, and perfbench still passes it.
-        # ``frontier_mode``:
-        # - "snapshot": every round rewrites the surviving frontier (the
-        #   Iceberg MERGE copy-on-write analog). Simple, but a budget-bound
-        #   round (wave << frontier — the 10^10-URL steady state under
-        #   politeness) rewrites O(frontier) rows to consume O(wave).
-        # - "delta": merge-on-read. A budget-bound round appends only
-        #   links/retries (frontier_add) plus the consumed seqs — wave and
-        #   within-round dedup losers — as tombstones (frontier_del); reads
-        #   assemble base ∪ adds ∖ dels. Rows dropped by idempotent filters
-        #   (depth, closed-task, seen-key) stay physically present until
-        #   the base is rewritten — the filters re-drop them each read, and
-        #   a seen-key can never leave the append-only seen table, so none
-        #   can resurface. The base rewrite (rewrite_data_files analog)
-        #   triggers arithmetically when raw rows exceed
-        #   frontier_compact_factor x live rows, and is forced by dynamic
-        #   task open/close (a closed task's rows must not outlive a later
-        #   reopen). Budget-unbound rounds consume the whole view, so their
-        #   links∪retries output IS a fresh tiny base. Byte-parity with
-        #   snapshot mode is pinned by tests/test_frontier_delta.py.
-        if frontier_mode not in ("snapshot", "delta"):
+        # ``frontier_mode`` stays for the same reason (perfbench's
+        # steady_delta passes "delta", the one frontier layout left).
+        if frontier_mode != "delta":
             raise ValueError(f"unknown frontier_mode {frontier_mode!r}")
-        self.frontier_mode = frontier_mode
+        # The frontier is merge-on-read. A budget-bound round appends only
+        # links/retries (frontier_add) plus the consumed seqs — wave and
+        # within-round dedup losers — as tombstones (frontier_del); reads
+        # assemble base ∪ adds ∖ dels. Rows dropped by idempotent filters
+        # (depth, closed-task, seen-key) stay physically present until the
+        # base is rewritten — the filters re-drop them each read, and a
+        # seen-key can never leave the append-only seen table, so none can
+        # resurface. The base rewrite (rewrite_data_files analog) triggers
+        # arithmetically when raw rows exceed frontier_compact_factor x live
+        # rows, and is forced by dynamic task open/close (a closed task's
+        # rows must not outlive a later reopen). Budget-unbound rounds
+        # consume the whole view, so their links∪retries output IS a fresh
+        # tiny base. Oracle parity is pinned by tests/test_frontier_delta.py.
         self.frontier_compact_factor = float(frontier_compact_factor)
-        # ``frontier_bucket_rows``: delta-mode bases are written partitioned
-        # by (task, priority, seq div bucket_rows) — the pop sort key — so a
+        # ``frontier_bucket_rows``: bases are written partitioned by (task,
+        # priority, seq div bucket_rows) — the pop sort key — so a
         # budget-bound round partition-prunes its base read to the pop-order
         # PREFIX covering the wave (O(wave) read, not O(frontier); see the
-        # pruned-pop block in _run_round). 0 disables bucketing.
+        # pruned-pop block in _run_round).
+        if int(frontier_bucket_rows) < 1:
+            raise ValueError(
+                f"frontier_bucket_rows must be >= 1, got {frontier_bucket_rows}"
+            )
         self.frontier_bucket_rows = int(frontier_bucket_rows)
         self._force_frontier_compact = False
         self._last_prune: dict | None = None
@@ -446,10 +445,10 @@ class CrawlEngine:
             return
         self.tasks[name] = replace(t, closed=closed)
         self._rebuild_tasks_df()
-        # delta mode keeps filter-dropped rows physically in the view; a
+        # the merge-on-read view keeps filter-dropped rows physically; a
         # task-closed change makes those drops non-idempotent (a reopened
-        # task must not resurrect rows a snapshot run would have removed),
-        # so the next round folds the view into a fresh base
+        # task must not resurrect rows the oracle removed for good), so the
+        # next round folds the view into a fresh base
         self._force_frontier_compact = True
 
     def run_task(self, name: str, seed_rows: list[dict]) -> None:
@@ -468,21 +467,13 @@ class CrawlEngine:
     # ------------------------------------------------------------------ init
 
     def init_state(self, seeds: DataFrame) -> None:
-        """Round-0 snapshot. Seeds must be FRONTIER-shaped."""
-        bucket_rows = (
-            self.frontier_bucket_rows if self.frontier_mode == "delta" else 0
-        )
-        bcounts = self.store.write_frontier(
-            0, seeds, bucket_rows=bucket_rows or None
-        )
-        self.store.append("seen", 0, local_frame(self.spark, [], schemas.SEEN))
-        self.store.append(
-            "failed_once", 0, local_frame(self.spark, [], schemas.FAILED_ONCE)
-        )
-        per_task = seeds.groupBy("task").agg(
-            F.max("seq").alias("mx"), F.count(F.lit(1)).alias("n")
-        ).collect()
-        max_seq = max((r["mx"] for r in per_task), default=None)
+        """Round-0 base. Seeds must be FRONTIER-shaped."""
+        census = self.store.write_frontier(0, seeds, self.frontier_bucket_rows)
+        self.store.append_local("seen", 0, [], schemas.SEEN)
+        self.store.append_local("failed_once", 0, [], schemas.FAILED_ONCE)
+        bmeta = _bucket_meta(self.frontier_bucket_rows, census)
+        per_task = {t: sum(d.values()) for t, d in bmeta["raw"].items()}
+        max_seq = max((r["max_seq"] for r in census), default=None)
         # one-time global probe: a key-unique, reload-free seed set lets
         # round 1 skip the within-round dedup shuffle outright (the min_by
         # groupBy is provably the identity); the flag then propagates
@@ -507,23 +498,13 @@ class CrawlEngine:
                     t.name: [initial_carry(tier) for tier in t.limits]
                     for t in self.tasks.values()
                 },
-                "frontier_counts": {r["task"]: int(r["n"]) for r in per_task},
+                "frontier_counts": per_task,
                 "frontier_unique": frontier_unique,
                 "failed_once_count": 0,
                 "done": False,
-                **(
-                    {
-                        "frontier_base": 0,
-                        "frontier_raw": int(sum(r["n"] for r in per_task)),
-                        **(
-                            {"frontier_buckets": _bucket_meta(bucket_rows, bcounts)}
-                            if bcounts is not None
-                            else {}
-                        ),
-                    }
-                    if self.frontier_mode == "delta"
-                    else {}
-                ),
+                "frontier_base": 0,
+                "frontier_raw": sum(per_task.values()),
+                "frontier_buckets": bmeta,
             },
         )
 
@@ -560,15 +541,11 @@ class CrawlEngine:
         self.store.clean_round(rnd)
         self._drop_scratch(rnd)
         fr_round = man["frontier_round"]
-        fr_base = man.get("frontier_base")
-        if fr_base is not None:
-            # lazy GC of deltas folded into the committed base (safe only
-            # AFTER the base's manifest committed, hence at round start)
-            self.store.drop_frontier_deltas(fr_base)
-        if fr_base is not None and fr_base < fr_round:
-            frontier = self.store.read_frontier_view(fr_base, fr_round)
-        else:
-            frontier = self.store.read_frontier(fr_round)
+        fr_base = man["frontier_base"]
+        # lazy GC of deltas folded into the committed base (safe only AFTER
+        # the base's manifest committed, hence at round start)
+        self.store.drop_frontier_deltas(fr_base)
+        frontier = self.store.read_frontier_view(fr_base, fr_round)
         seen = self.store.read_through("seen", prev)
         if seen is None:
             seen = local_frame(spark, [], schemas.SEEN)
@@ -597,9 +574,9 @@ class CrawlEngine:
                 pending_counts[rr["task"]] = pending_counts.get(rr["task"], 0) + 1
             max_seq += len(rows)
             self._pending_seeds = []
-            # delta mode: these rows exist only in this in-memory union —
-            # a delta round must persist them as frontier_add (waved/lost
-            # ones are simultaneously tombstoned, which nets out exactly)
+            # these rows exist only in this in-memory union — a delta round
+            # must persist them as frontier_add (waved/lost ones are
+            # simultaneously tombstoned, which nets out exactly)
             stamped_seed_rows = rows
             frontier = frontier.unionByName(
                 local_frame(spark, rows, schemas.FRONTIER)
@@ -660,8 +637,8 @@ class CrawlEngine:
                 c = fresh.unionByName(reload_rows)
             return c
 
-        # ---- pruned pop (delta mode): read only the pop-order PREFIX of
-        # the bucketed base that covers this round's budgets, instead of
+        # ---- pruned pop: read only the pop-order PREFIX of the
+        # bucketed base that covers this round's budgets, instead of
         # scanning O(frontier). Exactness: the chosen bucket set is
         # pop-order closed per task (_select_pop_prefix), so once the
         # prefix holds >= budget wave-ELIGIBLE base rows for a task (or
@@ -673,22 +650,16 @@ class CrawlEngine:
         # loop: count survivors on the base prefix (adds excluded — they
         # cannot substitute in the pop order), widen any short task, redo.
         # Gates: frontier_unique (no cross-row dedup => candidate filters
-        # are row-local), no queued seeds, no host cap (host budgets are
-        # not task-prefix-coverable), and a bucketed base in the manifest.
+        # are row-local), no queued seeds, and no host cap (host budgets
+        # are not task-prefix-coverable).
         self._last_prune = None
         pruned_partial = False
-        bmeta = (
-            man.get("frontier_buckets")
-            if self.frontier_mode == "delta"
-            else None
-        )
+        bmeta = man["frontier_buckets"]
         if (
-            bmeta
-            and not fused
+            not fused
             and frontier_unique
             and not stamped_seed_rows
             and not self._hostcap_active
-            and fr_base is not None
         ):
             targets = {
                 t: max(2 * min(budgets.get(t, 0), 1 << 40), 1)
@@ -747,15 +718,16 @@ class CrawlEngine:
                 "key", *[c for c in cand.columns if c != "key"]
             )
         else:
-            # delta mode additionally needs the dedup LOSERS (same-key,
+            # a staged round also needs the dedup LOSERS (same-key,
             # non-winning rows): the reference contract drops them forever
             # at this round (visited marked by the winner's pop), so the
             # merge-on-read view must tombstone them — otherwise a loser
             # would resurface and out-rank the winner's retry if the winner
             # fails. collect_list rides the SAME single shuffle/aggregate;
             # the loser-seq array column travels inside the existing cand
-            # scratch and is read back from it — zero extra jobs.
-            want_losers = self.frontier_mode == "delta" and not fused
+            # scratch and is read back from it — zero extra jobs. A fused
+            # round waves every candidate, so it never takes a delta round.
+            want_losers = not fused
             aggs = [
                 F.min_by(
                     F.struct(*[c for c in non_reload2.columns if c != "key"]),
@@ -801,7 +773,7 @@ class CrawlEngine:
             F.sum(F.col("reload").cast("int")).alias("nreload"),
             *self._task_sums("cand"),
         )
-        dedup_losers = None  # delta mode: same-key non-winners to tombstone
+        dedup_losers = None  # same-key non-winners to tombstone
         if fused:
             # no scratch, no barrier: the candidate plan IS the wave and
             # flows straight into the fetch join; counts (incl. the
@@ -1015,7 +987,6 @@ class CrawlEngine:
         # stays out of the union. The job is DEFERRED into the write phase
         # below (run concurrently with the independent delta writes, which
         # need only the parsed-Observation counts already in hand).
-        self._desc(rnd, "accounting")
         counted = None
         for prep, kind in ((links_prep, "link"), (retries_prep, "retry")):
             if prep is not None:
@@ -1028,7 +999,7 @@ class CrawlEngine:
         frontier_cols = schemas.FRONTIER.fieldNames()
         empty_frontier = local_frame(spark, [], schemas.FRONTIER)
 
-        # ---- writes (appends, frontier snapshot, then commit). Empty
+        # ---- writes (appends, frontier advance, then commit). Empty
         # deltas are skipped entirely — read_through tolerates missing round
         # directories, and a skipped write is one less job + commit. Slim
         # projections of the parsed delta coalesce to a few output tasks:
@@ -1041,7 +1012,6 @@ class CrawlEngine:
             .select("key", F.col("curl").alias("url"))
             .withColumn("round", F.lit(rnd))
         )
-        self._desc(rnd, "write-deltas")
         lineage = (
             parsed.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(F.count("*").alias("rows"))
@@ -1101,7 +1071,7 @@ class CrawlEngine:
         # all table writes are independent jobs over warm scans — run them
         # concurrently (Spark job scheduling is thread-safe; local mode
         # shares the task-slot pool, so wall time ≈ the largest write, not
-        # the sum). The frontier snapshot and the deferred link/retry count
+        # the sum). The frontier write and the deferred link/retry count
         # job ride the same pool window: the count job (which materializes
         # the prep caches and supplies the seq offsets + link/retry metrics)
         # runs on THIS thread while the independent writes proceed.
@@ -1121,6 +1091,7 @@ class CrawlEngine:
             # kind -> (per-task count, per-slice count)
             counts = {k: (Counter(), Counter()) for k in ("link", "retry")}
             if counted is not None:
+                self._desc(rnd, "accounting")
                 for r in counted.groupBy("kind", "task", "pid").count().collect():
                     by_task, by_slice = counts[r["kind"]]
                     by_task[r["task"]] += r["count"]
@@ -1154,16 +1125,15 @@ class CrawlEngine:
                 retries = retries.drop("_oseq")
                 retries_f = retries.select(*frontier_cols)
 
-            # ---- frontier advance: merge-on-read delta vs snapshot ----
+            # ---- frontier advance: delta round vs base rewrite ----
             # A delta round appends O(links+retries) rows + O(wave+losers)
             # seq tombstones instead of rewriting the O(frontier) survivor
             # set. Taken only when the deferred set is nonempty (otherwise
             # links∪retries IS a fresh tiny base — write it), no config
             # change forced a fold, and the arithmetic raw/live forecast
             # stays under the compaction threshold (rewrite_data_files
-            # analog — the 1-in-K snapshot round amortizes to O(delta)).
+            # analog — the 1-in-K base rewrite amortizes to O(delta)).
             delta_round = False
-            raw_next = 0
             # pruned rounds never measured the full candidate set: use the
             # manifest's per-task frontier counts (an upper bound on live —
             # filter-dead rows stay counted until a compaction re-measures)
@@ -1174,16 +1144,10 @@ class CrawlEngine:
             eff_cand = (
                 sum(fcounts_prev.values()) if pruned_partial else n_cand
             )
-            if (
-                self.frontier_mode == "delta"
-                and not self._force_frontier_compact
-                and n_wave != eff_cand
-                and man.get("frontier_raw") is not None
-            ):
-                raw_next = (
-                    int(man["frontier_raw"])
-                    + n_links + n_retries + len(stamped_seed_rows)
-                )
+            raw_next = (
+                man["frontier_raw"] + n_links + n_retries + len(stamped_seed_rows)
+            )
+            if not self._force_frontier_compact and n_wave != eff_cand:
                 live_next = (eff_cand - n_wave) + n_links + n_retries
                 delta_round = raw_next <= self.frontier_compact_factor * max(
                     live_next, 1
@@ -1258,6 +1222,12 @@ class CrawlEngine:
                         next_frontier = next_frontier.unionByName(p)
                 else:
                     next_frontier = empty_frontier.coalesce(1)
+                base_fut = pool.submit(
+                    self._labeled, rnd, "frontier-snapshot",
+                    self.store.write_frontier, rnd, next_frontier,
+                    self.frontier_bucket_rows,
+                )
+                futs.append(base_fut)
 
             if n_failed > n_retries:
                 futs.append(
@@ -1291,26 +1261,13 @@ class CrawlEngine:
             self.store.append_local(
                 "metrics", rnd, metrics_rows, schemas.ROUND_METRICS
             )
-            snap_fut = None
-            if not delta_round:
-                snap_bucket_rows = (
-                    self.frontier_bucket_rows
-                    if self.frontier_mode == "delta"
-                    else 0
-                )
-                snap_fut = pool.submit(
-                    self._labeled, rnd, "frontier-snapshot",
-                    self.store.write_frontier, rnd, next_frontier,
-                    snap_bucket_rows or None,
-                )
-                futs.append(snap_fut)
-            # delta-mode consumption accounting for the pruned pop: which
-            # (task, priority, bucket) each waved row came from — an O(wave)
-            # job over the wave scratch, folded into the write window. Kept
-            # current even on rounds the pruner sat out (queued seeds, host
-            # cap), so the bucket live-bounds never go stale.
-            wave_bkts = None
-            if delta_round and bmeta is not None and not fused:
+            # a delta round's consumption accounting for the pruned pop:
+            # which (task, priority, bucket) each waved row came from — an
+            # O(wave) job over the wave scratch, folded into the write
+            # window. Kept current even on rounds the pruner sat out (queued
+            # seeds, host cap), so the bucket live-bounds never go stale.
+            if delta_round:
+                self._desc(rnd, "frontier-delta")
                 wave_bkts = (
                     wave.groupBy(
                         "task",
@@ -1327,7 +1284,7 @@ class CrawlEngine:
         # done iff the new frontier is empty (budget-deferred rows keep it
         # alive); its size is pure arithmetic over already-known counts —
         # deferred (candidates minus wave; seq is frontier-unique) + new
-        # links + retries — so no re-scan of the written snapshot is needed
+        # links + retries — so no re-scan of the written frontier is needed
         n_frontier = (eff_cand - n_wave) + n_links + n_retries
         done = n_frontier == 0
 
@@ -1367,40 +1324,27 @@ class CrawlEngine:
             frontier_unique=next_unique,
             failed_once_add=n_failed,
         )
-        if self.frontier_mode == "delta":
-            if delta_round:
-                new_man["frontier_base"] = man.get("frontier_base")
-                new_man["frontier_raw"] = int(raw_next)
-                if bmeta is not None:
-                    new_man["frontier_buckets"] = _merge_consumed(
-                        bmeta, wave_bkts
-                    )
-            else:
-                # this round's snapshot IS the new base (compaction / fresh
-                # tiny base of a fully-consumed round); old deltas are GC'd
-                # lazily at next round start, after this manifest commits
-                new_man["frontier_base"] = rnd
-                snap_counts = (
-                    snap_fut.result() if snap_fut is not None else None
-                )
-                if snap_counts is not None:
-                    bm = _bucket_meta(self.frontier_bucket_rows, snap_counts)
-                    new_man["frontier_buckets"] = bm
-                    # the bucketed write's partition stats are an EXACT
-                    # per-task census of the new base — replace any
-                    # arithmetic upper bounds (pruned rounds) with them
-                    exact = {
-                        t: sum(d.values()) for t, d in bm["raw"].items()
-                    }
-                    new_man["frontier_counts"] = {
-                        t: n for t, n in exact.items() if n
-                    }
-                    n_frontier = sum(exact.values())
-                    new_man["done"] = n_frontier == 0
-                else:
-                    new_man.pop("frontier_buckets", None)
-                new_man["frontier_raw"] = int(n_frontier)
-                self._force_frontier_compact = False
+        if delta_round:
+            new_man["frontier_raw"] = raw_next
+            new_man["frontier_buckets"] = _merge_consumed(bmeta, wave_bkts)
+        else:
+            # this round's write IS the new base (compaction / fresh tiny
+            # base of a fully-consumed round); old deltas are GC'd lazily at
+            # next round start, after this manifest commits
+            bm = _bucket_meta(self.frontier_bucket_rows, base_fut.result())
+            # the bucketed write's partition stats are an EXACT per-task
+            # census of the new base — replace any arithmetic upper bounds
+            # (pruned rounds) with them
+            exact = {t: sum(d.values()) for t, d in bm["raw"].items()}
+            n_frontier = sum(exact.values())
+            new_man.update(
+                frontier_base=rnd,
+                frontier_raw=n_frontier,
+                frontier_buckets=bm,
+                frontier_counts=exact,
+                done=n_frontier == 0,
+            )
+            self._force_frontier_compact = False
         new_man["stats"] = dict(
             round=rnd,
             selected=n_wave,
@@ -1426,10 +1370,10 @@ class CrawlEngine:
         """Commit a round that fetched nothing: an all-deferred staged
         round, or a fused round whose candidates all expired. Budgets
         accrue unused and nothing but the manifest is written — it keeps
-        pointing at the last materialized frontier (and, in delta mode, at
-        the unchanged base + raw size). The round's queued seeds lived only
-        in its in-memory frontier, so they go back on the queue and the
-        next round stamps them with the same seqs (max_seq stays put)."""
+        pointing at the unchanged frontier view (base, deltas, raw size).
+        The round's queued seeds lived only in its in-memory frontier, so
+        they go back on the queue and the next round stamps them with the
+        same seqs (max_seq stays put)."""
         self._pending_seeds = seed_rows
         for name, t in self.tasks.items():
             carries[name] = [
@@ -1461,7 +1405,7 @@ class CrawlEngine:
         frontier_unique: bool | None = None,
         failed_once_add: int = 0,
     ) -> dict:
-        out = {
+        return {
             "round": rnd,
             "max_seq": int(max_seq),
             "fetch_count": man["fetch_count"],
@@ -1475,17 +1419,13 @@ class CrawlEngine:
             else bool(frontier_unique),
             "failed_once_count": man["failed_once_count"] + failed_once_add,
             "frontier_counts": {t: int(n) for t, n in frontier_counts.items()},
+            # the frontier view's base rides through unchanged (the main
+            # write path overrides it after advancing the view); an idle
+            # round (_commit_idle) leaves the view exactly as it was
+            "frontier_base": man["frontier_base"],
+            "frontier_raw": man["frontier_raw"],
+            "frontier_buckets": man["frontier_buckets"],
         }
-        # delta-frontier bookkeeping rides through unchanged by default
-        # (the main write path overrides after advancing the view); an
-        # idle round (_commit_idle) leaves the view — and therefore base +
-        # raw size — exactly as it was
-        if man.get("frontier_base") is not None:
-            out["frontier_base"] = man.get("frontier_base")
-            out["frontier_raw"] = man.get("frontier_raw")
-            if man.get("frontier_buckets") is not None:
-                out["frontier_buckets"] = man.get("frontier_buckets")
-        return out
 
 
 def run_crawl(

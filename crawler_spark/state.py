@@ -2,17 +2,17 @@
 
 Replaces the reference's etcd control plane (master/master.go) with a
 driver-owned table store. Production target is Iceberg (snapshot commits,
-MERGE for frontier updates); this sandbox has no Iceberg runtime, so the
-same protocol is realized on plain parquet:
+merge-on-read deletes for frontier updates); this sandbox has no Iceberg
+runtime, so the same protocol is realized on plain parquet:
 
-- mutable state (``frontier``) is rewritten per round under
-  ``rounds/r{N}/frontier`` — the Iceberg equivalent is a MERGE producing a
-  new snapshot. In the engine's DELTA frontier mode (merge-on-read) a
-  budget-bound round instead appends new rows (``frontier_add``) and
-  consumed-seq tombstones (``frontier_del``); ``read_frontier_view``
-  assembles base ∪ adds minus dels, and the base is rewritten only when
-  the raw/live ratio crosses a threshold (rewrite_data_files analog) — so
-  steady-state per-round frontier I/O is O(wave+links), not O(frontier);
+- mutable state (``frontier``) is merge-on-read: a base under
+  ``rounds/r{N}/frontier``, bucketed on the pop sort key, plus per-round
+  appended rows (``frontier_add``) and consumed-seq tombstones
+  (``frontier_del``); ``read_frontier_view`` assembles base ∪ adds minus
+  dels, and the engine rewrites the base only when the raw/live ratio
+  crosses a threshold or the round consumed the whole view
+  (rewrite_data_files analog) — so steady-state per-round frontier I/O is
+  O(wave+links), not O(frontier);
 - monotone state (``seen``, ``failed_once``) and outputs (``parsed``,
   ``results``, ``order``, ``metrics``, ``failures``, ``lineage``) are
   append-only, written under ``<table>/round=N/`` — Iceberg appends;
@@ -33,16 +33,15 @@ Everything else in the engine is unchanged — the store is the only seam.
 
 | parquet stand-in (here)              | Iceberg equivalent |
 |--------------------------------------|--------------------|
-| ``write_frontier`` (full rewrite under ``rounds/r{N}/frontier``) | copy-on-write ``MERGE INTO frontier USING wave ON key WHEN MATCHED UPDATE/DELETE WHEN NOT MATCHED INSERT`` — one new snapshot per round |
 | ``append(table, rnd, df)`` under ``<table>/round=N/`` | ``df.writeTo(table).append()`` — Iceberg appends are already snapshot-atomic; the ``round=N`` subdir becomes a plain ``round`` partition column |
 | ``commit.json`` tmp+rename barrier | unnecessary — every Iceberg write IS an atomic snapshot commit; the cross-TABLE round barrier maps to a ``round`` watermark row appended last (or Nessie/REST-catalog multi-table transaction where available) |
 | ``latest_round`` (max committed manifest) | ``SELECT max(round)`` from the watermark table, or ``snapshot_id`` from ``<table>.snapshots`` metadata |
 | resume (ignore uncommitted round dirs) | time-travel read of the last committed snapshot: ``spark.read.option("snapshot-id", …)`` — uncommitted work is invisible by construction |
-| delta-frontier mode: ``frontier_add`` rows + ``frontier_del`` seq tombstones, assembled by ``read_frontier_view`` (base ∪ adds − dels) | merge-on-read table (``write.merge.mode=merge-on-read``): adds are appends, dels are positional/equality delete files; the read-side anti-join is what Iceberg readers do natively |
-| base rewrite when raw/live ratio crosses threshold (``write_frontier`` after deltas) + ``drop_frontier_deltas`` | ``CALL spark_catalog.system.rewrite_data_files(table => 'frontier')`` — compacts delete files into a new base; delta GC is automatic |
+| ``frontier_add`` rows + ``frontier_del`` seq tombstones, assembled by ``read_frontier_view`` (base ∪ adds − dels) | merge-on-read table (``write.merge.mode=merge-on-read``): adds are appends, dels are positional/equality delete files; the read-side anti-join is what Iceberg readers do natively |
+| base rewrite (``write_frontier``) on the engine's arithmetic trigger + ``drop_frontier_deltas`` | ``CALL spark_catalog.system.rewrite_data_files(table => 'frontier')`` — compacts delete files into a new base; delta GC is automatic |
 | ``compact(table, upto)`` (small-files merge with crash-safe marker; ``recover_compactions``) | ``rewrite_data_files`` with a snapshot-age filter; crash safety comes free from snapshot isolation (a failed rewrite commits nothing) |
 | ``expire_frontiers(keep_last)`` (delete old round dirs, ``protect`` pins) | ``CALL spark_catalog.system.expire_snapshots(table => 'frontier', retain_last => k)`` + ``remove_orphan_files``; ``protect`` = Iceberg branch/tag refs on pinned snapshots |
-| ``read_frontier`` partition/bucket pruning (``frontier_is_bucketed`` + pruned-pop dir filter) | hidden partitioning ``PARTITIONED BY (bucket(B, key))`` — pruning moves from path filters into Iceberg partition stats/manifest pruning |
+| ``read_frontier`` partition/bucket pruning (pruned-pop dir filter over the bucketed base) | hidden partitioning ``PARTITIONED BY (bucket(B, key))`` — pruning moves from path filters into Iceberg partition stats/manifest pruning |
 | ``clean_round`` (delete an uncommitted round) | no-op — uncommitted snapshots never existed; a half-written wave is rolled back by ``CALL …rollback_to_snapshot`` if ever made visible |
 | manifest scalar state (bucket carries, max seq, fetch count) | snapshot summary properties (``snapshot.summary()`` custom keys) or the same watermark-table row |
 """
@@ -54,8 +53,15 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StructField, StructType
 
+from . import schemas
 from .schemas import arrow_table
+
+# a frontier base as written: FRONTIER plus its bucket partition column
+_BUCKETED_FRONTIER = StructType(
+    list(schemas.FRONTIER.fields) + [StructField("_pbkt", IntegerType(), True)]
+)
 
 
 class SnapshotStore:
@@ -68,7 +74,7 @@ class SnapshotStore:
         "metrics",
         "failures",
         "lineage",
-        # delta-frontier mode (merge-on-read): per-round row appends and
+        # the merge-on-read frontier's per-round row appends and
         # consumed-seq tombstones. NEVER compact() these across a frontier
         # base boundary — the view reader filters round > base, so a merged
         # dir labeled with a round above the base would double-count rows
@@ -107,29 +113,26 @@ class SnapshotStore:
             return json.load(f)
 
     def write_frontier(
-        self, rnd: int, frontier: DataFrame, bucket_rows: int | None = None
-    ) -> list | None:
-        """Write the frontier base snapshot for round ``rnd``.
+        self, rnd: int, frontier: DataFrame, bucket_rows: int
+    ) -> list:
+        """Write the frontier base for round ``rnd``.
 
-        With ``bucket_rows`` set (delta mode), the base is written
-        PARTITIONED by (task, priority, _pbkt = seq div bucket_rows) —
-        the parquet stand-in for an Iceberg table partitioned on the pop
-        sort key. Because the wave pop is ordered (-priority, seq), the
-        (priority desc, _pbkt asc) directory walk enumerates rows in pop
-        order, so a budget-bound round can PARTITION-PRUNE the base read
-        to the pop-order prefix covering its wave (engine.py pruned-pop
-        path) instead of scanning O(frontier). Returns the per-(task,
-        priority, _pbkt) row counts — read back from the written files'
-        partition columns only (zero data columns scanned) — which the
-        engine persists in the manifest as the pruning metadata (the
-        Iceberg partition-stats analog).
+        The base is written PARTITIONED by (task, priority, _pbkt = seq div
+        bucket_rows) — the parquet stand-in for an Iceberg table
+        partitioned on the pop sort key. Because the wave pop is ordered
+        (-priority, seq), the (priority desc, _pbkt asc) directory walk
+        enumerates rows in pop order, so a budget-bound round can
+        PARTITION-PRUNE the base read to the pop-order prefix covering its
+        wave (engine.py pruned-pop path) instead of scanning O(frontier).
+        Returns the per-(task, priority, _pbkt) ``count`` and ``max_seq``
+        read back from the written files (partition columns plus ``seq``)
+        — the engine persists the counts in the manifest as the pruning
+        metadata (the Iceberg partition-stats analog), and takes round 0's
+        per-task counts and max seq from the same census.
         """
         from pyspark.sql import functions as F
 
         path = os.path.join(self._round_dir(rnd), "frontier")
-        if not bucket_rows:
-            frontier.write.mode("overwrite").parquet(path)
-            return None
         df = frontier.withColumn(
             "_pbkt", F.expr(f"CAST(seq div {int(bucket_rows)} AS INT)")
         )
@@ -140,44 +143,22 @@ class SnapshotStore:
             .parquet(path)
         )
         return (
-            self.spark.read.schema(self._frontier_schema(True))
+            self.spark.read.schema(_BUCKETED_FRONTIER)
             .parquet(path)
             .groupBy("task", "priority", "_pbkt")
-            .count()
+            .agg(F.count(F.lit(1)).alias("count"), F.max("seq").alias("max_seq"))
             .collect()
         )
 
-    def _frontier_schema(self, with_bucket: bool):
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
-        from . import schemas
-
-        if not with_bucket:
-            return schemas.FRONTIER
-        return StructType(
-            list(schemas.FRONTIER.fields)
-            + [StructField("_pbkt", IntegerType(), True)]
-        )
-
-    def frontier_is_bucketed(self, rnd: int) -> bool:
-        path = os.path.join(self._round_dir(rnd), "frontier")
-        if not os.path.isdir(path):
-            return False
-        return any(d.startswith("task=") for d in os.listdir(path))
-
     def read_frontier(self, rnd: int, with_bucket: bool = False) -> DataFrame:
         # explicit schema: skips the footer-inference job (a driver-serial
-        # per-round constant); the frontier is always FRONTIER-shaped.
-        # Bucketed bases carry their partition columns (task, priority,
-        # _pbkt) in directory names; the user schema resolves them by name
-        # (values cast from the dir strings), and _pbkt is dropped unless
-        # the caller wants it for partition-pruning filters.
-        from . import schemas
-
+        # per-round constant). The partition columns (task, priority,
+        # _pbkt) live in directory names; the user schema resolves them by
+        # name (values cast from the dir strings), and _pbkt is dropped
+        # unless the caller wants it for partition-pruning filters.
         path = os.path.join(self._round_dir(rnd), "frontier")
-        bucketed = self.frontier_is_bucketed(rnd)
-        df = self.spark.read.schema(self._frontier_schema(bucketed)).parquet(path)
-        if bucketed and not with_bucket:
+        df = self.spark.read.schema(_BUCKETED_FRONTIER).parquet(path)
+        if not with_bucket:
             df = df.select(*schemas.FRONTIER.fieldNames())
         return df
 
@@ -208,8 +189,6 @@ class SnapshotStore:
         sufficiency must be proven against BASE rows only (appended rows
         are always read in full and cannot substitute for unread base
         rows in the pop order)."""
-        from . import schemas
-
         out = self.read_frontier(base_rnd, with_bucket=base_filter is not None)
         if base_filter is not None:
             out = out.filter(base_filter).select(*schemas.FRONTIER.fieldNames())
@@ -229,8 +208,6 @@ class SnapshotStore:
         engine's clean_round sweep removes torn current-round dirs before
         any read. ``base_filter`` partition-prunes the base side only
         (pruned-pop path); appends are always read in full."""
-        from . import schemas
-
         out = self.read_frontier(base_rnd, with_bucket=base_filter is not None)
         if base_filter is not None:
             out = out.filter(base_filter).select(*schemas.FRONTIER.fieldNames())
@@ -328,10 +305,6 @@ class SnapshotStore:
     # fixed per-table delta schemas (skips per-round inference jobs for the
     # hot reads; tables absent here infer as before)
     def _table_schema(self, table: str):
-        from pyspark.sql.types import StructType
-
-        from . import schemas
-
         if table == "seen":
             return schemas.SEEN
         if table == "failed_once":
@@ -416,8 +389,8 @@ class SnapshotStore:
     #   delta labeled round=upto. read_through(rnd>=upto) is unchanged;
     #   time travel below the horizon is given up (identical to expiring
     #   Iceberg snapshots past the retention window).
-    # - expire_frontiers(keep_last): drop the per-round frontier rewrites
-    #   (full copies, the MERGE outputs) older than the retention window;
+    # - expire_frontiers(keep_last): drop the frontier bases (full copies,
+    #   the rewrite_data_files outputs) older than the retention window;
     #   manifests stay, so latest_round()/resume are unaffected.
     #
     # Crash safety of compact: the swap is guarded by a marker file written
@@ -493,7 +466,7 @@ class SnapshotStore:
         """Drop frontier snapshots older than the last ``keep_last``
         committed rounds (manifests are kept — resume still works from the
         newest snapshot). ``protect``: rounds never expired — the latest
-        manifest's ``frontier_base`` in delta mode, which may be arbitrarily
+        manifest's ``frontier_base``, which may be arbitrarily
         far behind. Returns the number of snapshots removed."""
         base = os.path.join(self.root, "rounds")
         if not os.path.isdir(base):

@@ -35,11 +35,6 @@ def main() -> int:
     ap.add_argument("--master", default=None, help="override master (default: from spark-submit)")
     ap.add_argument("--synthetic", action="store_true",
                     help="generate the default synthetic fixture in --state/fx")
-    ap.add_argument("--frontier-mode", choices=("snapshot", "delta"),
-                    default="snapshot",
-                    help="delta = merge-on-read frontier (O(wave+links) I/O "
-                         "per budget-bound round instead of an O(frontier) "
-                         "rewrite; recommended at 10^9+-URL frontiers)")
     args = ap.parse_args()
 
     from crawler_spark.engine import CrawlEngine
@@ -90,7 +85,6 @@ def main() -> int:
     eng = CrawlEngine(
         spark, f"{args.state}/engine", GraphFetcher(web_graph),
         tasks, rules, robots, round_s=args.round_s,
-        frontier_mode=args.frontier_mode,
     )
     store: SnapshotStore = eng.store
     if store.latest_round() is None:

@@ -90,9 +90,10 @@ def test_closed_task_frontier_rows_dropped(dynamic_crawl):
     until the explicit re-open push (the in-flight topic links of round 1
     are gone for good, like requests failing Request.Check)."""
     _, _, eng = dynamic_crawl
-    # round 2 ran with group_task closed: its written frontier must hold
+    # round 2 ran with group_task closed: its frontier view must hold
     # zero group_task rows even though round 1 discovered topic links
-    f2 = eng.store.read_frontier(2)
+    man = eng.store.manifest(2)
+    f2 = eng.store.read_frontier_view(man["frontier_base"], man["frontier_round"])
     assert f2.filter(F.col("task") == "group_task").count() == 0
 
 

@@ -1,24 +1,23 @@
-"""Merge-on-read delta frontier mode (engine frontier_mode="delta").
+"""The merge-on-read delta frontier.
 
-Snapshot mode rewrites the surviving frontier every round — O(frontier)
-write I/O to consume O(wave), the dominant per-round cost of a budget-bound
-10^10-URL crawl. Delta mode appends links/retries + consumed-seq tombstones
-and folds to a fresh base only on the arithmetic compaction trigger. These
-tests pin byte-parity of the two modes on the full fixture (duplicate
+Rewriting the surviving frontier every round costs O(frontier) write I/O
+to consume O(wave), the dominant per-round cost of a budget-bound
+10^10-URL crawl. The engine instead appends links/retries + consumed-seq
+tombstones and folds to a fresh base only on the arithmetic compaction
+trigger. These tests pin oracle parity on the full fixture (duplicate
 links + multi-tier budgets — both delta hazards present), the loser-
 tombstone semantics on a handcrafted budget-bound graph with a failing
-page, and kill+resume in delta mode.
+page, and kill+resume across delta rounds.
 """
 
 from __future__ import annotations
 
 import os
 
-import pytest
-
 from crawler_spark.engine import CrawlEngine
 from crawler_spark.fixtures import make_fixture, write_fixture
 from crawler_spark.operators.fetch import GraphFetcher
+from crawler_spark.oracle import run_oracle
 from crawler_spark.textcore import LimitTier, Rule, TaskCfg, canonicalize, host_of, seen_key
 
 
@@ -34,30 +33,26 @@ def _final_state(eng):
     return rnd, order, seen
 
 
-def _run(spark, root, fx_dir, fx, mode, **kw):
-    web = spark.read.parquet(f"{fx_dir}/web_graph")
-    eng = CrawlEngine(
-        spark, f"{root}/state_{mode}", GraphFetcher(web), fx.tasks, fx.rules,
-        fx.robots, fx.round_s, frontier_mode=mode, **kw,
-    )
-    eng.init_state(spark.read.parquet(f"{fx_dir}/seeds"))
-    eng.run()
-    return eng
-
-
-def test_delta_matches_snapshot_on_full_fixture(spark, tmpdir_):
+def test_delta_matches_oracle_on_full_fixture(spark, tmpdir_):
     fx = make_fixture()
     write_fixture(fx, f"{tmpdir_}/fx", spark)
-    snap = _run(spark, tmpdir_, f"{tmpdir_}/fx", fx, "snapshot")
-    delt = _run(spark, tmpdir_, f"{tmpdir_}/fx", fx, "delta",
-                frontier_compact_factor=3.0)
-    assert _final_state(snap) == _final_state(delt)
+    web = spark.read.parquet(f"{tmpdir_}/fx/web_graph")
+    delt = CrawlEngine(
+        spark, f"{tmpdir_}/state", GraphFetcher(web), fx.tasks, fx.rules,
+        fx.robots, fx.round_s, frontier_compact_factor=3.0,
+    )
+    delt.init_state(spark.read.parquet(f"{tmpdir_}/fx/seeds"))
+    delt.run()
+    o = run_oracle(fx.seeds, fx.web_graph, fx.tasks, fx.rules, fx.robots, fx.round_s)
+    rnd, order, seen = _final_state(delt)
+    assert rnd == o.rounds
+    assert order == sorted(o.order_full)
+    assert seen == sorted(o.seen)
     # the delta path genuinely engaged: some committed round has no
-    # frontier snapshot dir (its view lives in base + add/del deltas)
-    rnd = delt.store.latest_round()
+    # frontier base dir (its view lives in base + add/del deltas)
     delta_rounds = [
         r for r in range(1, rnd + 1)
-        if not os.path.isdir(f"{tmpdir_}/state_delta/rounds/r{r:05d}/frontier")
+        if not os.path.isdir(f"{tmpdir_}/state/rounds/r{r:05d}/frontier")
     ]
     assert delta_rounds, "no round took the delta path — fixture not budget-bound?"
 
@@ -106,15 +101,14 @@ def _hub_fixture():
     return pages, seeds, tasks, rules
 
 
-@pytest.mark.parametrize("mode", ["snapshot", "delta"])
-def test_loser_tombstones_and_retry_order(spark, tmpdir_, mode):
+def test_loser_tombstones_and_retry_order(spark, tmpdir_):
     from crawler_spark import schemas
 
     pages, seeds, tasks, rules = _hub_fixture()
     web = spark.createDataFrame(pages)
     eng = CrawlEngine(
-        spark, f"{tmpdir_}/st_{mode}", GraphFetcher(web), tasks, rules, [],
-        round_s=60, frontier_mode=mode, frontier_compact_factor=10.0,
+        spark, f"{tmpdir_}/st", GraphFetcher(web), tasks, rules, [],
+        round_s=60, frontier_compact_factor=10.0,
     )
     eng.init_state(spark.createDataFrame(seeds, schemas.FRONTIER))
     eng.run()
@@ -127,8 +121,8 @@ def test_loser_tombstones_and_retry_order(spark, tmpdir_, mode):
     )
     c_rows = [o for o in order if o[2].endswith("/leaf/C")]
     # C fetched EXACTLY twice: the dedup winner and its single retry — the
-    # same-key dedup LOSER must never resurface, even though in delta mode
-    # it stays physically present until tombstoned
+    # same-key dedup LOSER must never resurface, even though it stays
+    # physically present in the merge-on-read view until tombstoned
     assert len(c_rows) == 2, order
     # the retry carries a FRESH seq above every other fetched seq; the
     # loser's smaller original seq out-ranking it is the resurfacing bug
@@ -162,12 +156,12 @@ def test_delta_mode_kill_and_resume(spark, tmpdir_):
     ref.run()
 
     d1 = CrawlEngine(spark, f"{tmpdir_}/delta", GraphFetcher(web), fx.tasks,
-                     fx.rules, fx.robots, fx.round_s, frontier_mode="delta",
+                     fx.rules, fx.robots, fx.round_s,
                      frontier_compact_factor=4.0)
     d1.init_state(seeds)
     d1.run(max_rounds=2)  # simulated kill
     d2 = CrawlEngine(spark, f"{tmpdir_}/delta", GraphFetcher(web), fx.tasks,
-                     fx.rules, fx.robots, fx.round_s, frontier_mode="delta",
+                     fx.rules, fx.robots, fx.round_s,
                      frontier_compact_factor=4.0)
     d2.run()  # resume from the committed manifest (base + deltas)
     assert _final_state(ref) == _final_state(d2)

@@ -11,7 +11,19 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from crawler_spark import schemas
+from crawler_spark.schemas import local_frame
 from crawler_spark.state import SnapshotStore
+
+
+def _frontier_rows(spark, n):
+    rows = [
+        {"url": f"u{i}", "curl": f"u{i}", "host": "h", "method": "GET",
+         "key": f"k{i}", "task": "t", "rule": "r", "depth": 0, "priority": 0,
+         "seq": i, "attempt": 0, "tmp": {}}
+        for i in range(n)
+    ]
+    return local_frame(spark, rows, schemas.FRONTIER)
 
 
 def _seed_store(spark, root, n_rounds=5):
@@ -21,7 +33,7 @@ def _seed_store(spark, root, n_rounds=5):
             F.concat(F.lit("k"), "id").alias("key"), F.lit(r).alias("round_added")
         )
         st.append("seen", r, df)
-        st.write_frontier(r, spark.range(3).select(F.col("id").alias("seq")))
+        st.write_frontier(r, _frontier_rows(spark, 3), bucket_rows=2)
         st.commit(r, {"round": r})
     return st
 

@@ -23,3 +23,14 @@ def test_more_than_256_tasks_rejected(spark, tmp_path):
     with pytest.raises(ValueError, match="257 tasks"):
         CrawlEngine(spark, state, None, tasks, [], [])
     assert not os.path.exists(state)
+
+
+def test_frontier_bucket_rows_below_one_rejected(spark, tmp_path):
+    """Every frontier base is bucketed; there is no unbucketed layout that
+    a bucket size of 0 could select."""
+    tasks = [TaskCfg(name="t", limits=(LimitTier(10, 60, 10),))]
+    state = str(tmp_path / "state")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="frontier_bucket_rows"):
+            CrawlEngine(spark, state, None, tasks, [], [], frontier_bucket_rows=bad)
+    assert not os.path.exists(state)
