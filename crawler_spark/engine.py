@@ -60,7 +60,7 @@ from .operators.canon import with_canonical
 from .operators.dedup import anti_join_seen
 from .operators.fetch import GraphFetcher
 from .operators.parse import parse_fetched
-from .operators.seq import finalize_dense_seq, prepare_dense_seq, rank_key_col
+from .operators.seq import finalize_dense_seq, prepare_dense_seq
 from .operators.topk import budgeted_topk
 
 
@@ -969,8 +969,8 @@ class CrawlEngine:
             )
 
             # 9. seq assignment, fused (operators/seq.py): prepare the
-            # range-partitioned, id-tagged frames here (cached, still lazy);
-            # their per-slice counts ride the accounting job below and
+            # bucket-partitioned, rank-tagged frames here (cached, still
+            # lazy); their per-bucket counts ride the accounting job below and
             # finalize_dense_seq attaches the dense seqs with no extra barrier.
             links_prep = prepare_dense_seq(
                 links, ["parent_seq", "match_idx"], bound=max_seq,
@@ -992,7 +992,7 @@ class CrawlEngine:
             if prep is not None:
                 part = prep.select(
                     F.lit(kind).alias("kind"), "task",
-                    rank_key_col(prep).alias("pid"),
+                    F.col("_bucket").alias("pid"),
                 )
                 counted = part if counted is None else counted.unionByName(part)
 

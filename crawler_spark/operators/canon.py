@@ -5,35 +5,18 @@ sort query params) is implemented as PURE Spark SQL expressions — string
 ops inside whole-stage codegen, no Python boundary — because it sits on
 the hottest path (every discovered link, every round). The expressions
 reproduce ``textcore.canonicalize`` (the function the oracle calls)
-exactly; the golden E2E suite and the ``crawl_canonical_keys`` DuckDB
-oracle (messy-spelling inputs) pin the parity.
+exactly; tests/test_canon.py, the golden E2E suite and the
+``crawl_canonical_keys`` DuckDB oracle (messy-spelling inputs) pin the
+parity.
 
-A pandas-UDF variant (``canonicalize_udf``) wrapping the textcore function
-is kept for cross-checking and for URL shapes outside the SQL fast path.
 The seen key stays JVM-side: ``F.md5(concat(curl, method))`` matches the
 reference's md5(URL+Method) (spider/request.go:113-117).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-
-from pyspark.sql.types import StringType
-
-from ..textcore import canonicalize, host_of
-
-
-@pandas_udf(StringType())
-def canonicalize_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(canonicalize)
-
-
-@pandas_udf(StringType())
-def host_udf(urls: pd.Series) -> pd.Series:
-    return urls.map(host_of)
 
 
 def _let(var: str, value: str, body: str) -> str:
@@ -97,10 +80,10 @@ def _canon_struct_expr(url: str = "url") -> str:
        fragment still stripped, query still sorted, '' -> '/')
 
     The whitespace trim is ``\\s``-regex both ends (Python ``str.strip()``
-    strips tab/newline too; SQL ``trim`` only strips spaces). Outside this
-    domain (mailto:, data:, malformed-IPv6 ValueError edges) use
-    ``canonicalize_udf`` — tests/test_canon.py pins the SQL/Python
-    parity corpus.
+    strips tab/newline too; SQL ``trim`` only strips spaces). Parity is
+    not claimed outside this domain (mailto:, data:, malformed-IPv6
+    ValueError edges); tests/test_canon.py pins the SQL/Python parity
+    corpus.
     """
     # case 1: scheme://... — bind scheme, then the urlsplit struct
     dp1 = "if(_sch = 'http', ':80', if(_sch = 'https', ':443', ''))"

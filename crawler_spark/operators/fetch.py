@@ -4,10 +4,9 @@
   against the synthetic web-graph table (collect/collect.go:42-83 is the
   real-network analog). A left join; at test scale AQE broadcasts the tiny
   wave side.
-- HttpFetcher: the production path — an async-HTTP Arrow-batched
-  ``mapInPandas`` (aiohttp per partition, politeness already enforced
-  upstream by wave selection). Stubbed here: the sandbox has no network and
-  no aiohttp; the Spark-side plumbing (schema, signature) is real.
+- HttpFetcher: the production path — an Arrow-batched ``mapInPandas``
+  that fetches each partition through stdlib urllib on a per-partition
+  thread pool (politeness already enforced upstream by wave selection).
 
 Validity: ok := status==200 AND len(body) >= 6000
 (engine/schedule.go:355-372; the 6000 threshold is the reference's constant).
@@ -150,143 +149,6 @@ def urllib_transport(
         return 0, b"", None, int((_time.time() - t0) * 1000)
 
 
-async def asyncio_transport(
-    url: str,
-    headers: dict[str, str],
-    proxy: str | None,
-    timeout_s: float,
-) -> tuple[int, bytes, str | None, int]:
-    """Asyncio HTTP/1.1 GET transport (stdlib-only; reference analog:
-    the goroutine-per-request pool of collect/collect.go:42-83, which is
-    cooperative I/O concurrency — exactly what an event loop gives one
-    Python worker without 16 OS threads per partition).
-
-    Minimal but real: raw ``asyncio.open_connection`` (TLS for https),
-    HTTP proxy via absolute-URI request line for http and a CONNECT
-    tunnel + in-place ``start_tls`` upgrade for https (so the proxy is
-    honored for BOTH schemes, like urllib's handler chain), redirect
-    following (301/302/303/307/308, <= 5 hops, relative Locations
-    resolved — parity with urllib's HTTPRedirectHandler), status +
-    header parse, Content-Length / chunked / read-to-EOF bodies, charset
-    hint from Content-Type. Same return contract and error mapping as
-    ``urllib_transport`` (transport-level failure -> status 0, engine
-    routes through retry-once). A production deployment can swap in
-    aiohttp unchanged — the fetcher only requires a coroutine function
-    with this signature.
-    """
-    import asyncio
-    import ssl as _ssl
-    import time as _time
-    from urllib.parse import urljoin, urlsplit
-
-    t0 = _time.time()
-
-    def _ms() -> int:
-        return int((_time.time() - t0) * 1000)
-
-    async def _one(cur_url: str) -> tuple[int, bytes, str | None, dict[str, str]]:
-        u = urlsplit(cur_url)
-        tls = u.scheme == "https"
-        port = u.port or (443 if tls else 80)
-        path = (u.path or "/") + (f"?{u.query}" if u.query else "")
-        if proxy:
-            p = urlsplit(proxy if "//" in proxy else f"http://{proxy}")
-            reader, writer = await asyncio.wait_for(
-                asyncio.open_connection(p.hostname, p.port or 80), timeout_s
-            )
-            if tls:
-                # CONNECT tunnel, then TLS upgrade on the same stream
-                writer.write(
-                    f"CONNECT {u.hostname}:{port} HTTP/1.1\r\n"
-                    f"Host: {u.hostname}:{port}\r\n\r\n".encode("latin-1")
-                )
-                await asyncio.wait_for(writer.drain(), timeout_s)
-                st_line = await asyncio.wait_for(reader.readline(), timeout_s)
-                tunnel_status = int(st_line.split(None, 2)[1])
-                while (
-                    await asyncio.wait_for(reader.readline(), timeout_s)
-                ).rstrip(b"\r\n"):
-                    pass
-                if tunnel_status != 200:
-                    writer.close()
-                    raise OSError(f"proxy CONNECT failed: {tunnel_status}")
-                await asyncio.wait_for(
-                    writer.start_tls(
-                        _ssl.create_default_context(),
-                        server_hostname=u.hostname,
-                    ),
-                    timeout_s,
-                )
-                req_target = path
-            else:
-                req_target = cur_url  # absolute-URI form for HTTP proxies
-        else:
-            reader, writer = await asyncio.wait_for(
-                asyncio.open_connection(u.hostname, port, ssl=tls), timeout_s
-            )
-            req_target = path
-        try:
-            lines = [f"GET {req_target} HTTP/1.1", f"Host: {u.netloc}"]
-            lines += [f"{k}: {v}" for k, v in headers.items()]
-            lines += ["Connection: close", "", ""]
-            writer.write("\r\n".join(lines).encode("latin-1"))
-            await asyncio.wait_for(writer.drain(), timeout_s)
-
-            async def _line() -> bytes:
-                return await asyncio.wait_for(reader.readline(), timeout_s)
-
-            status_line = await _line()
-            status = int(status_line.split(None, 2)[1])
-            hdrs: dict[str, str] = {}
-            while True:
-                ln = (await _line()).rstrip(b"\r\n")
-                if not ln:
-                    break
-                k, _, v = ln.partition(b":")
-                hdrs[k.decode("latin-1").strip().lower()] = v.decode(
-                    "latin-1"
-                ).strip()
-            if hdrs.get("transfer-encoding", "").lower() == "chunked":
-                chunks = []
-                while True:
-                    size = int((await _line()).split(b";")[0], 16)
-                    if size == 0:
-                        await _line()  # trailing CRLF after last-chunk
-                        break
-                    chunks.append(
-                        await asyncio.wait_for(
-                            reader.readexactly(size), timeout_s
-                        )
-                    )
-                    await _line()  # chunk-terminating CRLF
-                raw = b"".join(chunks)
-            elif "content-length" in hdrs:
-                raw = await asyncio.wait_for(
-                    reader.readexactly(int(hdrs["content-length"])), timeout_s
-                )
-            else:
-                raw = await asyncio.wait_for(reader.read(), timeout_s)
-            charset = None
-            ctype = hdrs.get("content-type", "")
-            if "charset=" in ctype:
-                charset = ctype.split("charset=", 1)[1].split(";")[0].strip()
-            return status, raw, charset, hdrs
-        finally:
-            writer.close()
-
-    try:
-        cur = url
-        for _ in range(5):  # redirect hop cap, matching urllib's default
-            status, raw, charset, hdrs = await _one(cur)
-            if status in (301, 302, 303, 307, 308) and "location" in hdrs:
-                cur = urljoin(cur, hdrs["location"])
-                continue
-            return status, raw, charset, _ms()
-        return 0, b"", None, _ms()  # redirect loop -> transport failure
-    except Exception:
-        return 0, b"", None, _ms()
-
-
 class HttpFetcher:
     """Production HTTP fetch stage (reference BrowserFetch, collect/collect.go:42-83).
 
@@ -313,13 +175,8 @@ class HttpFetcher:
     The transport is injectable (``transport(url, headers, proxy,
     timeout_s) -> (status, raw, charset_hint, latency_ms)``) so the full
     request-assembly + decode path unit-tests with a mock and no network;
-    the default is stdlib urllib behind a per-partition thread pool. Pass
-    a COROUTINE FUNCTION with the same signature (e.g. the stdlib-only
-    ``asyncio_transport`` above, or an aiohttp wrapper on a real
-    deployment) and the partition drains through one event loop with
-    ``max_pool`` in-flight requests instead — cooperative latency hiding
-    with no extra OS threads; rotation / header / decode logic is
-    transport-agnostic either way.
+    the default is ``urllib_transport``. Every transport runs on the
+    partition's thread pool of ``max_pool`` workers.
 
     Politeness is enforced UPSTREAM by wave selection (per-host budgets),
     so the fetch stage itself never sleeps; ``max_pool`` bounds in-flight
@@ -328,10 +185,12 @@ class HttpFetcher:
     """
 
     # in-place wave processing: the mapInPandas transport runs on the
-    # wave's own partitioning, so the engine salts the wave scratch by
-    # (host, key) to spread hot-domain work-skew across executors. (On the
-    # budget-unbound identity path the wave inherits the dedup groupBy's
-    # uniform hash(key) layout instead — equivalent spread.)
+    # wave's own partitioning, so the engine salts the wave by (host, key)
+    # to spread hot-domain work-skew across executors: the fused wave and
+    # the staged top-k wave scratch both. The staged identity wave reuses
+    # the candidate scratch unsalted; that scratch has the dedup groupBy's
+    # hash(key) layout only when the frontier is not key-unique, and the
+    # frontier read's layout otherwise.
     salt_wave = True
 
     def __init__(
@@ -359,17 +218,12 @@ class HttpFetcher:
             "status", "body", "latency_ms"
         ]
 
-        import inspect
-
-        is_async = inspect.iscoroutinefunction(self.transport)
-
         def fetch_batches(batches):
-            import asyncio
             from concurrent.futures import ThreadPoolExecutor
 
             from .decode import decode_body
 
-            def _req(seq: int, task: str):
+            def one(url: str, seq: int, task: str):
                 headers = {}
                 if uas:
                     headers["User-Agent"] = uas[seq % len(uas)]
@@ -377,38 +231,13 @@ class HttpFetcher:
                 if ck:
                     headers["Cookie"] = ck
                 proxy = proxies[seq % len(proxies)] if proxies else None
-                return headers, proxy
-
-            def one(url: str, seq: int, task: str):
-                headers, proxy = _req(seq, task)
                 return transport(url, headers, proxy, timeout_s)
-
-            async def drain_async(pdf):
-                # one event loop per batch, ``max_pool`` in-flight via a
-                # semaphore: cooperative latency hiding with zero extra OS
-                # threads (the asyncio analog of the goroutine pool)
-                sem = asyncio.Semaphore(max_pool)
-
-                async def one_async(url: str, seq: int, task: str):
-                    headers, proxy = _req(seq, task)
-                    async with sem:
-                        return await transport(url, headers, proxy, timeout_s)
-
-                return await asyncio.gather(
-                    *[
-                        one_async(u, s, t)
-                        for u, s, t in zip(pdf["url"], pdf["seq"], pdf["task"])
-                    ]
-                )
 
             with ThreadPoolExecutor(max_workers=max_pool) as pool:
                 for pdf in batches:
-                    if is_async:
-                        results = asyncio.run(drain_async(pdf))
-                    else:
-                        results = list(
-                            pool.map(one, pdf["url"], pdf["seq"], pdf["task"])
-                        )
+                    results = list(
+                        pool.map(one, pdf["url"], pdf["seq"], pdf["task"])
+                    )
                     pdf = pdf.copy()
                     pdf["status"] = pd.Series(
                         [r[0] for r in results], index=pdf.index, dtype="int32"

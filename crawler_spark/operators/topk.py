@@ -69,7 +69,6 @@ def budgeted_topk(
     group_col: str,
     budgets: DataFrame | dict[str, int],
     default_budget: int,
-    local_prune: bool = True,
     group_counts: dict[str, int] | None = None,
 ) -> DataFrame:
     """Rows of df ranked within group_col by (-priority, seq); keep rank <= budget(group).
@@ -107,13 +106,12 @@ def budgeted_topk(
 
     passed = tagged.filter(F.col("_gn") <= F.col("_gb")).drop("_gn", "_gb")
     to_cut = tagged.filter(F.col("_gn") > F.col("_gb")).drop("_gn")
-    if local_prune:
-        local = Window.partitionBy(group_col, F.spark_partition_id()).orderBy(*_order_cols())
-        to_cut = (
-            to_cut.withColumn("_lrank", F.row_number().over(local))
-            .filter(F.col("_lrank") <= F.col("_gb"))
-            .drop("_lrank")
-        )
+    local = Window.partitionBy(group_col, F.spark_partition_id()).orderBy(*_order_cols())
+    to_cut = (
+        to_cut.withColumn("_lrank", F.row_number().over(local))
+        .filter(F.col("_lrank") <= F.col("_gb"))
+        .drop("_lrank")
+    )
     w = Window.partitionBy(group_col).orderBy(*_order_cols())
     cut = (
         to_cut.withColumn("_rank", F.row_number().over(w))

@@ -1633,12 +1633,10 @@ def exact_substring_dedup_winnow(
     spans then run the shared keeper/island/cut machinery
     (``_cut_spans``). The hash is the first 8 hex chars of md5(gram) —
     32 bits, ENGINE-PORTABLE, so the DuckDB oracle replays the exact
-    selection; argmin is one integer ``min(h * 2^30 + offset)`` per
-    window (lexicographic (h, offset): hash ties break to the leftmost
-    offset — within any window the comparison is between offsets under
-    one shift, so the decision is content-relative, as the guarantee
-    needs; offsets must fit 2^30 chars/doc — 1 GiB documents, not a
-    constraint).
+    selection; argmin is one struct ``min((h, offset))`` per window
+    (lexicographic (h, offset): hash ties break to the leftmost offset,
+    so the decision is content-relative, as the guarantee needs; no
+    per-document length limit).
 
     Guarantees (and the one trade): selection of an offset depends only
     on the gram hashes within w-1 positions either side, so two copies
@@ -1663,7 +1661,6 @@ def exact_substring_dedup_winnow(
     """
     from pyspark.sql import Window
 
-    shift = 1 << 30
     body = documents.select("doc_id", F.col("text").alias("body")).withColumn(
         "clen", F.length("body").cast("long")
     )
@@ -1683,10 +1680,9 @@ def exact_substring_dedup_winnow(
             F.expr(f"substring(body, s + 1, {int(n)})").alias("gram"),
         )
     )
-    comb = (
-        F.expr("CAST(conv(substring(md5(gram), 1, 8), 16, 10) AS BIGINT)")
-        * F.lit(shift)
-        + F.col("start")
+    comb = F.struct(
+        F.expr("CAST(conv(substring(md5(gram), 1, 8), 16, 10) AS BIGINT)").alias("h"),
+        F.col("start").alias("s"),
     )
     wnd = (
         Window.partitionBy("doc_id")
@@ -1696,7 +1692,7 @@ def exact_substring_dedup_winnow(
     sel = (
         spans.withColumn("_comb", comb)
         .withColumn("_min", F.min("_comb").over(wnd))
-        .select("doc_id", (F.col("_min") % shift).alias("start"))
+        .select("doc_id", F.col("_min.s").alias("start"))
         .distinct()
     )
     picked = spans.join(sel, ["doc_id", "start"], "left_semi")

@@ -25,12 +25,14 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         # AQE: runtime coalescing + skew-join splitting. Fetch-cost skew by
-        # host is additionally handled explicitly via salting (wave.py).
+        # host is additionally handled explicitly: the engine salts the
+        # wave by (host, key) for fetchers that fetch in place.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # All per-page logic is Arrow-batched pandas UDFs (input_hint: no
-        # per-row Python).
+        # The Python stages that remain (HttpFetcher's mapInPandas, the
+        # pandas-UDF parse for rules the JVM parse cannot express) are
+        # Arrow-batched: no per-row Python. Parse runs in the JVM by default.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Python workers: keep the pool warm. Without these, UDF-heavy

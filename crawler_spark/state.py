@@ -97,16 +97,36 @@ class SnapshotStore:
     def _manifest_path(self, rnd: int) -> str:
         return os.path.join(self._round_dir(rnd), "commit.json")
 
-    def latest_round(self) -> int | None:
+    def _committed_rounds(self) -> list[int]:
+        """Rounds with a committed manifest, ascending."""
         base = os.path.join(self.root, "rounds")
         if not os.path.isdir(base):
-            return None
-        committed = [
+            return []
+        return sorted(
             int(d[1:])
             for d in os.listdir(base)
             if d.startswith("r") and os.path.exists(self._manifest_path(int(d[1:])))
-        ]
-        return max(committed, default=None)
+        )
+
+    def latest_round(self) -> int | None:
+        return max(self._committed_rounds(), default=None)
+
+    def _delta_dir(self, table: str, rnd: int) -> str:
+        return os.path.join(self.root, table, f"round={rnd}")
+
+    def _delta_rounds(self, table: str, lo: int, hi: int) -> list[int]:
+        """Rounds N of ``table``'s ``round=N`` delta dirs with lo < N <= hi,
+        ascending."""
+        base = os.path.join(self.root, table)
+        if not os.path.isdir(base):
+            return []
+        rounds = (
+            int(d.split("=")[1]) for d in os.listdir(base) if d.startswith("round=")
+        )
+        return sorted(r for r in rounds if lo < r <= hi)
+
+    def _delta_dirs(self, table: str, lo: int, hi: int) -> list[str]:
+        return [self._delta_dir(table, r) for r in self._delta_rounds(table, lo, hi)]
 
     def manifest(self, rnd: int) -> dict:
         with open(self._manifest_path(rnd)) as f:
@@ -162,19 +182,8 @@ class SnapshotStore:
             df = df.select(*schemas.FRONTIER.fieldNames())
         return df
 
-    def _frontier_delta_dirs(self, table: str, base_rnd: int, rnd: int) -> list[str]:
-        base = os.path.join(self.root, table)
-        if not os.path.isdir(base):
-            return []
-        return [
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if d.startswith("round=")
-            and base_rnd < int(d.split("=")[1]) <= rnd
-        ]
-
     def read_frontier_dels(self, base_rnd: int, rnd: int) -> DataFrame | None:
-        del_dirs = self._frontier_delta_dirs("frontier_del", base_rnd, rnd)
+        del_dirs = self._delta_dirs("frontier_del", base_rnd, rnd)
         if not del_dirs:
             return None
         return self.spark.read.schema("seq BIGINT").parquet(*del_dirs)
@@ -211,7 +220,7 @@ class SnapshotStore:
         out = self.read_frontier(base_rnd, with_bucket=base_filter is not None)
         if base_filter is not None:
             out = out.filter(base_filter).select(*schemas.FRONTIER.fieldNames())
-        add_dirs = self._frontier_delta_dirs("frontier_add", base_rnd, rnd)
+        add_dirs = self._delta_dirs("frontier_add", base_rnd, rnd)
         if add_dirs:
             out = out.unionByName(
                 self.spark.read.schema(schemas.FRONTIER).parquet(*add_dirs)
@@ -227,18 +236,14 @@ class SnapshotStore:
         crash between base write and commit must leave the deltas intact
         for the old manifest's view)."""
         for table in ("frontier_add", "frontier_del"):
-            base = os.path.join(self.root, table)
-            if not os.path.isdir(base):
-                continue
-            for d in os.listdir(base):
-                if d.startswith("round=") and int(d.split("=")[1]) <= upto:
-                    shutil.rmtree(os.path.join(base, d), ignore_errors=True)
+            for d in self._delta_dirs(table, -1, upto):
+                shutil.rmtree(d, ignore_errors=True)
 
     def append(
         self, table: str, rnd: int, df: DataFrame,
         partition_by: str | None = None,
     ) -> None:
-        path = os.path.join(self.root, table, f"round={rnd}")
+        path = self._delta_dir(table, rnd)
         if os.path.exists(path):  # crashed, uncommitted attempt — overwrite
             shutil.rmtree(path)
         w = df.write.mode("overwrite")
@@ -259,7 +264,7 @@ class SnapshotStore:
         import pyarrow.parquet as pq
 
         tbl = arrow_table(rows, schema)
-        path = os.path.join(self.root, table, f"round={rnd}")
+        path = self._delta_dir(table, rnd)
         if os.path.exists(path):  # crashed, uncommitted attempt — overwrite
             shutil.rmtree(path)
         os.makedirs(path)
@@ -277,7 +282,7 @@ class SnapshotStore:
         if os.path.exists(self._manifest_path(rnd)):
             return
         for table in self.APPEND_TABLES:
-            path = os.path.join(self.root, table, f"round={rnd}")
+            path = self._delta_dir(table, rnd)
             if os.path.exists(path):
                 shutil.rmtree(path)
         # per-task typed result tables are dynamic (lazy-created on first
@@ -300,7 +305,7 @@ class SnapshotStore:
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        return reader.parquet(os.path.join(self.root, table, f"round={rnd}"))
+        return reader.parquet(self._delta_dir(table, rnd))
 
     # fixed per-table delta schemas (skips per-round inference jobs for the
     # hot reads; tables absent here infer as before)
@@ -319,14 +324,7 @@ class SnapshotStore:
         """Union of committed deltas round<=rnd (read-committed view)."""
         if table == "documents":
             return self._read_documents(rnd)
-        base = os.path.join(self.root, table)
-        if not os.path.isdir(base):
-            return None
-        dirs = [
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if d.startswith("round=") and int(d.split("=")[1]) <= rnd
-        ]
+        dirs = self._delta_dirs(table, -1, rnd)
         if not dirs:
             return None
         reader = self.spark.read
@@ -348,18 +346,11 @@ class SnapshotStore:
 
         from .operators.parse import spans_col
 
-        base = os.path.join(self.root, "parsed")
-        if not os.path.isdir(base):
-            return None
-        dirs = [
-            os.path.join(base, d)
-            for d in os.listdir(base)
-            if d.startswith("round=") and int(d.split("=")[1]) <= rnd
-        ]
+        dirs = self._delta_dirs("parsed", -1, rnd)
         if not dirs:
             return None
         return (
-            self.spark.read.option("basePath", base)
+            self.spark.read.option("basePath", os.path.join(self.root, "parsed"))
             .parquet(*dirs)
             # `ok` is a PARTITION column of the parsed delta (discovered as
             # string); the equality filter still prunes at file-listing level
@@ -407,19 +398,12 @@ class SnapshotStore:
         """Merge all ``round<=upto`` deltas of ``table`` into one base delta
         at ``round=upto``. Returns the number of deltas merged (0 = no-op).
         Call between rounds (no concurrent writer of this table)."""
-        base = os.path.join(self.root, table)
-        if not os.path.isdir(base):
-            return 0
-        rounds = sorted(
-            int(d.split("=")[1])
-            for d in os.listdir(base)
-            if d.startswith("round=") and int(d.split("=")[1]) <= upto
-        )
+        rounds = self._delta_rounds(table, -1, upto)
         if len(rounds) < 2:
             return 0
-        tmp = os.path.join(base, ".compact_tmp")
+        tmp = os.path.join(self.root, table, ".compact_tmp")
         shutil.rmtree(tmp, ignore_errors=True)
-        dirs = [os.path.join(base, f"round={r}") for r in rounds]
+        dirs = [self._delta_dir(table, r) for r in rounds]
         df = self.spark.read.parquet(*dirs)
         w = df.coalesce(
             max(1, self.spark.sparkContext.defaultParallelism)
@@ -468,14 +452,7 @@ class SnapshotStore:
         newest snapshot). ``protect``: rounds never expired — the latest
         manifest's ``frontier_base``, which may be arbitrarily
         far behind. Returns the number of snapshots removed."""
-        base = os.path.join(self.root, "rounds")
-        if not os.path.isdir(base):
-            return 0
-        committed = sorted(
-            int(d[1:])
-            for d in os.listdir(base)
-            if d.startswith("r") and os.path.exists(self._manifest_path(int(d[1:])))
-        )
+        committed = self._committed_rounds()
         # the newest manifest's frontier_base is always implicitly protected
         if committed:
             last = self.manifest(committed[-1])

@@ -38,10 +38,12 @@ Usage: python tools/ann_study.py [sf_dir] [--clustered]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# import the crawler_spark of the repository this tool sits in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

@@ -10,13 +10,15 @@ Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# import the crawler_spark of the repository this tool sits in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -91,7 +93,8 @@ def main() -> int:
             continue
         print(f"PASS {name}: {len(g)} rows, {time.time()-t0:.1f}s")
 
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} ok; failures: {failures}")
+    n_run = len(only & qs.keys()) if only else len(qs)
+    print(f"\n{n_run - len(failures)}/{n_run} ok; failures: {failures}")
     return 1 if failures else 0
 
 
