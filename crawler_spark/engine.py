@@ -13,14 +13,14 @@ Every stage is DataFrame algebra; with GraphFetcher and the JVM parse path
 a round starts no Python worker (HttpFetcher's transport and the pandas
 parse fallback are the Arrow-batched exceptions). The driver only moves
 scalar budget state (a few ints per task) and round counters, and every
-frame it builds from its own rows (tasks, robots, budgets, counts, seq
-offsets, rules, queued seeds) is an Arrow local relation
+frame it builds from its own rows (tasks, robots, budgets, seq offsets,
+rules, queued seeds) is an Arrow local relation
 (``schemas.local_frame``) that plans as a task-free LocalTableScan.
 Shuffles per round: the exact seen anti-join, the two budgeted top-k
-windows (locally pruned first), the host-salted repartition, and the link
-seq assignment (wave-bounded). All are bounded by the wave / politeness
-budget except the anti-join, which is the irreducible frontier cost
-(Iceberg MERGE at production scale).
+windows (one exchange per level; the task level prunes map-side), the
+host-salted repartition, and the link seq assignment (wave-bounded). All
+are bounded by the wave / politeness budget except the anti-join, which
+is the irreducible frontier cost (Iceberg MERGE at production scale).
 
 Per-round driver work is kept O(|wave|), never O(|seen|):
 - the seen-set size is a manifest counter, not a count() scan;
@@ -299,7 +299,7 @@ class CrawlEngine:
         self.typed_tables = typed_tables
         # per-host round caps as a DATAFRAME derived from the robots table
         # (never a driver dict / CASE chain: at 10^7+ hosts the budget side
-        # must stay distributed; topk joins it against per-wave host counts)
+        # must stay distributed; topk joins it onto the host-ranked wave)
         self._host_budgets = local_frame(spark, robots, schemas.ROBOTS).select(
             "host",
             F.when(F.col("crawl_delay_ms") <= 0, F.lit(1 << 40))
@@ -334,8 +334,8 @@ class CrawlEngine:
             )
         # host caps only bind when some host declares a positive crawl
         # delay OR a revisit plan is installed; with neither, the
-        # host-level topk is provably the identity — skip its
-        # counts/broadcast jobs per round. Config-scale check (robots is a
+        # host-level topk is provably the identity — skip its window
+        # exchange per round. Config-scale check (robots is a
         # config list here; at production scale the flag is a catalog
         # property of the robots table, not a scan).
         self._hostcap_active = revisit_plan is not None or any(
@@ -793,7 +793,9 @@ class CrawlEngine:
                 )
                 cand = cand.drop("_lseqs")
             # per-task candidate counts, free by-product of the scratch
-            # write — lets the task-budget topk skip its own counts job
+            # write — the task-level topk passes the tasks that fit through
+            # a filter and ranks only the tasks it must cut, with no counts
+            # job of its own
             cand_counts = self._task_counts(obs_cand.get, "cand")
             n_cand = sum(cand_counts.values())
 

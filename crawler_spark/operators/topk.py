@@ -4,29 +4,37 @@ Reproduces the reference's priority-first FIFO dispatch
 (engine/schedule.go:248-290) as a *budgeted wave pop*: for each group
 (task, or host) take the first ``k`` rows ordered by (-priority, seq).
 
-Scale design — the naive ``Window.partitionBy(group)`` funnels each
-group's entire candidate set through one partition; for a hot host with a
-10^5-row wave that is a single-task sort (measured ~10-20s serial per
-round). Three-way split instead:
+Scale design — each budget level costs ONE exchange, and no count,
+aggregate or broadcast-of-counts job:
 
-1. per-group counts (one parallel aggregate, broadcast back);
-2. groups whose candidate count fits their budget PASS THROUGH with no
-   window and no shuffle — the common case for fat steady-state waves;
-3. only groups that actually need cutting are ranked, and those are first
-   pruned per physical partition to their own budget (partition-parallel),
-   so the single-partition global rank sees at most
-   budget x num_partitions rows — bounded by the politeness budget, not
-   the frontier.
+- **Driver-known budgets and counts** (the task level: a config-scale
+  budget dict, and per-task counts the engine observed while writing the
+  candidate scratch). Groups that fit their budget pass through an
+  ``isin`` filter with no window and no shuffle — the common case for fat
+  steady-state waves. Only the groups that need cutting are ranked, and
+  the rank filter carries the literal ``_rank <= K`` (K = the largest
+  budget among them). Spark's ``InsertWindowGroupLimit`` rule turns that
+  into a ``WindowGroupLimit Partial`` node BELOW the group's exchange: each
+  map partition keeps at most K rows per group, so the shuffle is bounded
+  by K x partitions per group, not by the group's candidate count. Each
+  group's own budget is then applied through a broadcast join of the
+  (group, budget) local frame. ``get_spark`` raises Spark's
+  ``windowGroupLimitThreshold`` so budgets above its default of 1,000 keep
+  the partial node.
+- **DataFrame budgets** (the host level): one ``row_number`` window by
+  group, then a join of the budgets and ``_rank <= coalesce(_budget,
+  default)``. The join is a broadcast while the budgets are a local frame;
+  at scale it is a shuffle join on the group key, co-partitioned with the
+  window's exchange. No map-side prune applies (the bound is per row), so
+  each host's rows meet in one partition: the engine runs this level over
+  the task-capped wave, which bounds them by the task budgets, not by the
+  frontier.
 
-All three paths are deterministic and together equal the global top-k.
-
-Budgets are a DATAFRAME, not an expression: with the north rule's 10^7+
-hosts, a per-group CASE chain would make the expression tree (and its
-codegen) O(#groups), and a driver-side dict would not fit at all. A
-(group, budget) frame joined onto the per-group counts keeps the plan size
-constant in #groups; at production scale it is itself a partitioned table
-(derived from robots crawl-delays) and the join of counts-to-budgets is a
-shuffle of #distinct-groups-in-wave rows, never #groups-total.
+Budgets are a DATAFRAME, not an expression, wherever the group dim is not
+config-scale: with the north rule's 10^7+ hosts, a per-group CASE chain
+would make the expression tree (and its codegen) O(#groups), and a
+driver-side dict would not fit at all. At production scale the host
+budgets are a partitioned table derived from robots crawl-delays.
 """
 
 from __future__ import annotations
@@ -38,19 +46,10 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from ..schemas import local_frame
 
 
-def _group_frame(spark, rows, group_col: str, value_col: str) -> DataFrame:
-    return local_frame(
-        spark,
-        rows,
-        StructType(
-            [StructField(group_col, StringType()), StructField(value_col, LongType())]
-        ),
-    )
-
-
-def _order_cols():
+def _ranked(df: DataFrame, group_col: str) -> DataFrame:
     # priority-class-first, FIFO within class (engine/schedule.go:254-264)
-    return [F.col("priority").desc(), F.col("seq").asc()]
+    w = Window.partitionBy(group_col).orderBy(F.col("priority").desc(), F.col("seq"))
+    return df.withColumn("_rank", F.row_number().over(w))
 
 
 def budgets_df(spark, budgets: dict[str, int], group_col: str) -> DataFrame:
@@ -59,8 +58,12 @@ def budgets_df(spark, budgets: dict[str, int], group_col: str) -> DataFrame:
     Only for genuinely small dims (tasks, test fixtures). Host budgets at
     crawl scale must come straight from a robots-derived table.
     """
-    return _group_frame(
-        spark, [(g, int(k)) for g, k in budgets.items()], group_col, "_budget"
+    return local_frame(
+        spark,
+        [(g, int(k)) for g, k in budgets.items()],
+        StructType(
+            [StructField(group_col, StringType()), StructField("_budget", LongType())]
+        ),
     )
 
 
@@ -74,48 +77,48 @@ def budgeted_topk(
     """Rows of df ranked within group_col by (-priority, seq); keep rank <= budget(group).
 
     ``budgets``: a DataFrame with columns (``group_col``, ``_budget``) —
-    or a dict, lifted via :func:`budgets_df`. Groups absent from it get
-    ``default_budget``.
+    or a dict. Groups absent from it get ``default_budget``.
 
     ``group_counts``: exact per-group row counts of ``df``, if the caller
     already knows them (the engine observes per-task counts inside the
-    candidate scratch write) — skips the counts aggregation job. Only for
-    config-scale group dims; host-scale counts must stay distributed.
+    candidate scratch write). With a dict of budgets they split the groups
+    on the driver into pass-through and cut groups; with DataFrame budgets
+    they are not needed. Only for config-scale group dims; host-scale counts
+    must stay distributed.
     """
+    if isinstance(budgets, dict) and group_counts is not None:
+        return _known_topk(df, group_col, budgets, default_budget, group_counts)
     if isinstance(budgets, dict):
         budgets = budgets_df(df.sparkSession, budgets, group_col)
+    return (
+        _ranked(df, group_col)
+        .join(budgets, group_col, "left")
+        .filter(F.col("_rank") <= F.coalesce(F.col("_budget"), F.lit(default_budget)))
+        .select(*df.columns)
+    )
 
-    if group_counts is not None:
-        counts = _group_frame(
-            df.sparkSession,
-            [(g, int(n)) for g, n in group_counts.items()],
-            group_col,
-            "_gn",
-        )
-    else:
-        counts = df.groupBy(group_col).agg(F.count("*").alias("_gn"))
-    # budgets joined onto the per-group COUNTS (small: one row per distinct
-    # group in the wave), then broadcast with the counts — the data rows
-    # never join against the full budget table.
-    counts_b = (
-        counts.join(budgets, group_col, "left")
-        .withColumn("_gb", F.coalesce(F.col("_budget"), F.lit(default_budget)))
-        .drop("_budget")
-    )
-    tagged = df.join(F.broadcast(counts_b), group_col)
 
-    passed = tagged.filter(F.col("_gn") <= F.col("_gb")).drop("_gn", "_gb")
-    to_cut = tagged.filter(F.col("_gn") > F.col("_gb")).drop("_gn")
-    local = Window.partitionBy(group_col, F.spark_partition_id()).orderBy(*_order_cols())
-    to_cut = (
-        to_cut.withColumn("_lrank", F.row_number().over(local))
-        .filter(F.col("_lrank") <= F.col("_gb"))
-        .drop("_lrank")
+def _known_topk(
+    df: DataFrame,
+    group_col: str,
+    budgets: dict[str, int],
+    default_budget: int,
+    group_counts: dict[str, int],
+) -> DataFrame:
+    budget = {g: int(budgets.get(g, default_budget)) for g in group_counts}
+    fit = [g for g, n in group_counts.items() if n <= budget[g]]
+    cut = {g: budget[g] for g, n in group_counts.items() if n > budget[g]}
+    passed = df.filter(F.col(group_col).isin(fit))
+    if not cut:
+        return passed
+    # the literal bound is what InsertWindowGroupLimit matches: it plans a
+    # map-side WindowGroupLimit (Partial) under the exchange
+    k = max(cut.values())
+    cut_rows = (
+        _ranked(df.filter(F.col(group_col).isin(list(cut))), group_col)
+        .filter(F.col("_rank") <= F.lit(k))
+        .join(F.broadcast(budgets_df(df.sparkSession, cut, group_col)), group_col)
+        .filter(F.col("_rank") <= F.col("_budget"))
+        .select(*df.columns)
     )
-    w = Window.partitionBy(group_col).orderBy(*_order_cols())
-    cut = (
-        to_cut.withColumn("_rank", F.row_number().over(w))
-        .filter(F.col("_rank") <= F.col("_gb"))
-        .drop("_rank", "_gb")
-    )
-    return passed.unionByName(cut)
+    return passed.unionByName(cut_rows)

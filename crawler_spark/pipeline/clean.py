@@ -61,7 +61,7 @@ def curation_cascade(
     band_size: int = 3,
     k: int = 3,
     seg_k: int = 10,
-    substr_n: int = 8,
+    substr_n: int | None = None,
     boiler_share_bp: int = 3000,
     min_words: int = 50,
     min_stop_hits: int = 2,
@@ -95,6 +95,10 @@ def curation_cascade(
       relaxed 30/1 floors EXPLICITLY (a gate a corpus cannot pass at any
       quality level measures nothing — but that is the test corpus's
       problem, not a reason to soften the shipped defaults).
+
+    ``substr_n`` is the exact-substring gram width: words in
+    ``substr_mode="words"`` (default 8), characters in ``"bytes"``
+    (default 50, the ExactSubstr paper's value).
 
     Removal counts are stage-attributed the way the cascade runs them: a
     doc removed by exact dedup is not also counted against the LSH or
@@ -138,7 +142,7 @@ def _cascade_flags(
     band_size: int,
     k: int,
     seg_k: int,
-    substr_n: int,
+    substr_n: int | None,
     boiler_share_bp: int,
     min_words: int,
     min_stop_hits: int,
@@ -192,8 +196,13 @@ def _cascade_flags(
     # substr_mode selects granularity: "words" = the shuffle-cheap
     # word-n-gram default; "bytes" = the paper-fidelity byte-level pass
     # (RefinedWeb's exact-substring stage IS Lee et al. ExactSubstr at
-    # byte resolution) — substr_n then counts CHARACTERS, not words.
+    # byte resolution) — substr_n then counts CHARACTERS, not words, and
+    # its default is the paper's 50 characters (8 characters would cut
+    # every repeated short string corpus-wide).
     from crawler_spark.pipeline.textstats import exact_substring_dedup_bytes
+
+    if substr_n is None:
+        substr_n = 50 if substr_mode == "bytes" else 8
 
     surv = flagged.filter("exact_kept AND near_keep").select("doc_id", "text")
     substr_op = (
@@ -234,7 +243,7 @@ def cleaned_corpus(
     band_size: int = 3,
     k: int = 3,
     seg_k: int = 10,
-    substr_n: int = 8,
+    substr_n: int | None = None,
     boiler_share_bp: int = 3000,
     min_words: int = 50,
     min_stop_hits: int = 2,
@@ -264,7 +273,7 @@ def cleaned_corpus_packed(
     band_size: int = 3,
     k: int = 3,
     seg_k: int = 10,
-    substr_n: int = 8,
+    substr_n: int | None = None,
     boiler_share_bp: int = 3000,
     min_words: int = 50,
     min_stop_hits: int = 2,
@@ -305,6 +314,11 @@ def cleaned_corpus_packed(
         corpus.select("doc_id", F.col("clean_text").alias("text")),
         capacity=capacity,
     )
+    # the packer's cache only served its per-bucket totals pass, which has
+    # run; released here, the final projection re-tokenizes the
+    # checkpointed export once instead of pinning a cached relation for
+    # the life of the session
+    packed._cached.unpersist()
     return (
         corpus.select("doc_id", "source", "n_words")
         .join(packed, "doc_id")

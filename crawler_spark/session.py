@@ -43,6 +43,14 @@ def get_spark(
         .config("spark.python.worker.idleTimeoutSeconds", "0")
         .config("spark.python.factory.idleWorkerMaxPoolSize", "96")
         .config("spark.sql.session.timeZone", "UTC")
+        # A `rank <= K` filter over a rank-like window plans a map-side
+        # WindowGroupLimit (Partial) under the exchange only while K is at
+        # most this threshold (Spark's default: 1,000). The wave pop's K is
+        # a per-task round budget, which can be far larger; without the
+        # partial node every row of a cut group is shuffled. The group limit
+        # streams over sorted rows (a counter, no buffer), so no K is too
+        # large for it.
+        .config("spark.sql.optimizer.windowGroupLimitThreshold", str((1 << 31) - 1))
         # AQE re-plans fire a SparkListenerSQLAdaptiveExecutionUpdate whose
         # payload is the FULL pretty-printed physical plan; with this
         # engine's wide per-round plans (parse rule CASEs, canon bindings,

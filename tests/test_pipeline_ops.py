@@ -2056,6 +2056,68 @@ def test_curation_cascade_production_lsh_config_consistent(spark):
         assert s == p, (src, s, p)
 
 
+def _substr_corpus(spark):
+    """Four distinct 46-word docs: docs 1,2 share a 23-char phrase,
+    docs 3,4 share a 68-char one; every doc carries one stop word. The
+    phrases sit mid-doc, so every 10-token boilerplate segment they touch
+    also holds words of the doc's own."""
+    SHORT = "paxlo queem rindle sorv"
+    LONG = ("tumbek harnow vistral quobbin marrowick sellindor"
+            " pantrevo gulmerist")
+
+    def body(seed, phrase):
+        ws = [f"w{seed}{i:02d}" for i in range(46)]
+        ws[5] = "the"
+        return " ".join(ws[:36] + [phrase] + ws[36:])
+
+    rows = [
+        (1, body("a", SHORT), "en", "s1", 0),
+        (2, body("b", SHORT), "en", "s1", 0),
+        (3, body("c", LONG), "en", "s1", 0),
+        (4, body("d", LONG), "en", "s1", 0),
+    ]
+    return spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    )
+
+
+def test_curation_cascade_bytes_mode_defaults_to_50_char_grams(spark):
+    """substr_mode="bytes" without substr_n cuts with the paper's
+    50-character grams, not the word mode's 8: the 68-char shared run is
+    cut, the 23-char one is kept; 8-character grams would also cut the
+    short phrase and the stop-word context every doc shares."""
+    from crawler_spark.pipeline.clean import curation_cascade
+
+    d = _substr_corpus(spark)
+
+    def removed(**kw):
+        r = curation_cascade(
+            d, substr_mode="bytes", min_words=30, min_stop_hits=1, **kw
+        ).collect()
+        return r[0]["substr_chars_removed"]
+
+    default = removed()
+    assert default == removed(substr_n=50)
+    assert 0 < default < removed(substr_n=8)
+
+
+def test_cleaned_corpus_packed_leaves_no_cached_relation(spark):
+    """pack_sequences caches its prefix-sum relation; the composition must
+    release it, so no call leaves a session-lifetime cache entry."""
+    from crawler_spark.pipeline.clean import cleaned_corpus_packed
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    out = cleaned_corpus_packed(
+        _substr_corpus(spark), capacity=64, substr_n=5, min_words=30,
+        min_stop_hits=1,
+    )
+    rows = out.collect()
+    assert len(rows) == 4 and sum(r["n_bins"] for r in rows) >= 4
+    del out
+    assert cache.isEmpty()
+
+
 def test_exact_substring_dedup_bytes_char_exact(spark):
     """Byte-level ExactSubstr semantics on a hand corpus: a shared run
     is cut from every copy but the first with boundaries exact to the

@@ -127,7 +127,7 @@ def test_round_driver_frames_are_local_relations(spark, tmp_path):
         F.lit(0).alias("priority"),
         F.col("id").alias("seq"),
     )
-    # the top-k counts and budgets side: no RDD scan anywhere in the pop
+    # the top-k budgets side: no RDD scan anywhere in the pop
     picked = budgeted_topk(
         rows, "task", {"a": 3}, 1 << 40, group_counts={"a": 20, "b": 20}
     )
@@ -151,18 +151,67 @@ def test_pricing_summary_has_partial_aggregation(spark):
     assert "hashpartitioning" in plan, plan
 
 
-def test_budgeted_topk_local_prune_bounds_shuffle(spark):
-    """The wave pop must pre-prune per physical partition before the global
-    per-group rank, so the shuffled volume is O(k x partitions), not O(n)."""
+def _tree(df) -> list[str]:
+    """The executed plan, one node per line, children indented below."""
+    return df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+
+def _indent(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def test_budgeted_topk_prunes_map_side_before_exchange(spark):
+    """The task-level wave pop must prune each map partition to K rows per
+    cut group BEFORE the group's exchange, so the shuffled volume is
+    O(K x partitions), not O(candidates). The prune is Spark's
+    WindowGroupLimit (Partial); K = 5,000 is above Spark's default
+    windowGroupLimitThreshold (1,000), so this also pins the session's
+    raised threshold."""
+    from pyspark.sql import functions as F
+
     from crawler_spark.operators.topk import budgeted_topk
 
-    ev = spark.read.parquet(f"{SF}/events.parquet").selectExpr(
-        "event_type AS task", "CAST(user_id AS INT) AS priority", "event_id AS seq"
+    rows = spark.range(20000).select(
+        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("task"),
+        (F.col("id") % 7).cast("int").alias("priority"),
+        F.col("id").alias("seq"),
     )
-    plan = _plan(budgeted_topk(ev, "task", {"click": 3}, default_budget=5))
-    # two Window nodes: the partition-local prune, then the global rank
-    assert plan.count("Window") >= 2, plan
-    assert "SPARK_PARTITION_ID" in plan.upper(), plan
+    picked = budgeted_topk(
+        rows, "task", {"a": 5000, "b": 3}, default_budget=5,
+        group_counts={"a": 10000, "b": 10000},
+    )
+    tree = _tree(picked)
+    ex = [i for i, ln in enumerate(tree) if "Exchange hashpartitioning(task" in ln]
+    assert len(ex) == 1, "\n".join(tree)
+    below = tree[ex[0] + 1:]
+    depth = _indent(tree[ex[0]])
+    subtree = below[: next(
+        (i for i, ln in enumerate(below) if _indent(ln) <= depth), len(below)
+    )]
+    assert any(
+        "WindowGroupLimit" in ln and ln.rstrip().endswith("5000, Partial")
+        for ln in subtree
+    ), "\n".join(tree)
+    assert "HashAggregate" not in "\n".join(tree)
+
+
+def test_budgeted_topk_host_level_one_exchange_no_counts(spark):
+    """With DataFrame budgets (the host level) the pop is one window by
+    host and a join of the budgets: exactly one exchange on the host key,
+    and no per-host count aggregate."""
+    from pyspark.sql import functions as F
+
+    from crawler_spark.operators.topk import budgeted_topk, budgets_df
+
+    rows = spark.range(2000).select(
+        F.concat(F.lit("h"), (F.col("id") % 13).cast("string")).alias("host"),
+        (F.col("id") % 3).cast("int").alias("priority"),
+        F.col("id").alias("seq"),
+    )
+    budgets = budgets_df(spark, {"h1": 3, "h2": 0}, "host")
+    plan = "\n".join(_tree(budgeted_topk(rows, "host", budgets, default_budget=40)))
+    assert len(re.findall(r"Exchange hashpartitioning\(host", plan)) == 1, plan
+    assert "HashAggregate" not in plan, plan
 
 
 def test_budgeted_topk_plan_size_independent_of_group_count(spark):

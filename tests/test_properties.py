@@ -1,12 +1,15 @@
 """Property/fuzz layer (SURVEY.md §5.2 layer 4, mirroring the reference's
 proxy fuzz style, proxy/proxy_test.go:12-38).
 
-Two tiers:
+Three tiers:
 - hypothesis fuzz over fixture shapes x politeness budgets against the pure
   oracle (fast): invariants that pin the reference semantics — no URL
   fetched twice unless reload (engine/schedule.go:343-351), no fetch over
   the host cap, no depth > MaxDepth, retry at most once per key
   (engine/schedule.go:442-445).
+- a differential hypothesis test of the wave pop (``budgeted_topk``)
+  against a pure-Python sort-and-cut, over both budget shapes and the
+  engine's task -> host chain.
 - one Spark-vs-oracle equality run at a non-default configuration that
   exercises the reload path (Task.Reload, spider/task.go:35) and a
   max_rounds cap — paths the golden E2E's default config doesn't hit.
@@ -17,12 +20,21 @@ from __future__ import annotations
 from dataclasses import replace
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
+from crawler_spark import schemas
 from crawler_spark.engine import CrawlEngine
 from crawler_spark.fixtures import make_fixture, write_fixture
 from crawler_spark.operators.fetch import GraphFetcher
+from crawler_spark.operators.topk import budgeted_topk, budgets_df
 from crawler_spark.oracle import run_oracle
 from crawler_spark.textcore import host_of, host_round_cap
 
@@ -96,6 +108,101 @@ def test_oracle_invariants_fuzz(
     #    check metrics arithmetic instead: selected = ok + failed
     for m in res.metrics:
         assert m["selected"] == m["fetched_ok"] + m["failed"]
+
+
+_WAVE = StructType([
+    StructField("task", StringType()),
+    StructField("host", StringType()),
+    StructField("priority", IntegerType()),
+    StructField("seq", LongType()),
+])
+_UNCAPPED = 1 << 40
+_wave_rows = st.lists(
+    st.tuples(
+        st.sampled_from(["a", "b", "c"]),
+        st.sampled_from(["h0", "h1", "h2"]),
+        st.integers(0, 2),  # few classes: priority ties are the norm
+    ),
+    max_size=40,
+).map(lambda rs: [(t, h, p, i) for i, (t, h, p) in enumerate(rs)])
+_budgets = st.dictionaries(st.sampled_from(["a", "b", "c", "h0", "h1", "h2"]),
+                           st.integers(0, 12))
+
+
+def _sort_and_cut(rows, gi, budgets, default):
+    """The reference pop: per group, the first budget(group) rows by
+    (-priority, seq); groups absent from ``budgets`` get ``default``."""
+    groups: dict[str, list] = {}
+    for r in rows:
+        groups.setdefault(r[gi], []).append(r)
+    out = []
+    for g, rs in groups.items():
+        rs.sort(key=lambda r: (-r[2], r[3]))
+        out += rs[: budgets.get(g, default)]
+    return sorted(out)
+
+
+def _topk(df, col, budgets, default, as_frame, counts):
+    if as_frame:
+        budgets = budgets_df(df.sparkSession, budgets, col)
+    return budgeted_topk(df, col, budgets, default, group_counts=counts)
+
+
+def _collect(df):
+    return sorted(tuple(r) for r in df.select(*_WAVE.fieldNames()).collect())
+
+
+def _counts(rows, gi):
+    counts: dict[str, int] = {}
+    for r in rows:
+        counts[r[gi]] = counts.get(r[gi], 0) + 1
+    return counts
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    rows=_wave_rows,
+    budgets=_budgets,
+    level=st.sampled_from(["task", "host"]),
+    default=st.sampled_from([0, 2, _UNCAPPED]),
+    as_frame=st.booleans(),
+    with_counts=st.booleans(),
+)
+# a budget of 0, a count equal to its budget, and a group absent from the
+# budgets, on both the pass-through/cut split and the ranked-join path
+@example(rows=[("a", "h0", 1, 0), ("a", "h1", 1, 1), ("b", "h0", 0, 2),
+               ("c", "h2", 2, 3), ("c", "h2", 2, 4), ("c", "h2", 0, 5)],
+         budgets={"a": 2, "b": 0}, level="task", default=1,
+         as_frame=False, with_counts=True)
+@example(rows=[("a", "h0", 1, 0), ("a", "h1", 1, 1), ("b", "h0", 0, 2),
+               ("c", "h2", 2, 3), ("c", "h2", 2, 4), ("c", "h2", 0, 5)],
+         budgets={"h0": 2, "h1": 0}, level="host", default=1,
+         as_frame=True, with_counts=False)
+def test_budgeted_topk_matches_sort_and_cut(
+    spark, rows, budgets, level, default, as_frame, with_counts
+):
+    gi = _WAVE.fieldNames().index(level)
+    df = schemas.local_frame(spark, rows, _WAVE)
+    counts = _counts(rows, gi) if with_counts else None
+    got = _collect(_topk(df, level, budgets, default, as_frame, counts))
+    assert got == _sort_and_cut(rows, gi, budgets, default)
+
+
+@settings(max_examples=15, deadline=None)
+@given(rows=_wave_rows, task_budgets=_budgets, host_budgets=_budgets)
+def test_budgeted_topk_task_then_host_chain(
+    spark, rows, task_budgets, host_budgets
+):
+    """The engine's staged wave: task budgets as a dict with the observed
+    candidate counts, then host budgets as a DataFrame over the picked
+    rows, both with an uncapped default."""
+    df = schemas.local_frame(spark, rows, _WAVE)
+    picked = _topk(df, "task", task_budgets, _UNCAPPED, False, _counts(rows, 0))
+    wave = _topk(picked, "host", host_budgets, _UNCAPPED, True, None)
+    want = _sort_and_cut(
+        _sort_and_cut(rows, 0, task_budgets, _UNCAPPED), 1, host_budgets, _UNCAPPED
+    )
+    assert _collect(wave) == want
 
 
 @pytest.mark.slow
