@@ -25,10 +25,16 @@ aggregate or broadcast-of-counts job:
   group, then a join of the budgets and ``_rank <= coalesce(_budget,
   default)``. The join is a broadcast while the budgets are a local frame;
   at scale it is a shuffle join on the group key, co-partitioned with the
-  window's exchange. No map-side prune applies (the bound is per row), so
-  each host's rows meet in one partition: the engine runs this level over
-  the task-capped wave, which bounds them by the task budgets, not by the
-  frontier.
+  window's exchange. No map-side prune applies (the bound is per row, not
+  a literal), so every wave row of a host is shuffled to, and sorted in,
+  one partition. The engine runs this level over the task-capped wave, so
+  a host's rows are bounded by the task budgets, not by the frontier, but
+  NOT by the host's own cap: a hot host's sort is unbounded by its
+  budget, where the former per-partition pre-prune held it to budget x
+  partitions. No workload has a skewed host, so that cost is unmeasured.
+  A map-side bound here would need the largest finite host cap as a
+  driver-known literal K (hosts at the uncapped sentinel passed through),
+  which this signature does not carry.
 
 Budgets are a DATAFRAME, not an expression, wherever the group dim is not
 config-scale: with the north rule's 10^7+ hosts, a per-group CASE chain

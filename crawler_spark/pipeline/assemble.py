@@ -292,13 +292,15 @@ def pack_sequences(
     if bound is None:
         bound = toks.agg(F.max("doc_id")).first()[0]
         if bound is None:
-            return toks.select(
+            empty = toks.select(
                 "doc_id", "n_tok",
                 F.lit(None).cast("long").alias("start_off"),
                 F.lit(None).cast("long").alias("first_bin"),
                 F.lit(None).cast("long").alias("last_bin"),
                 F.lit(None).cast("long").alias("n_bins"),
             )
+            empty._cached = None  # nothing cached for an empty input
+            return empty
     bucket = F.least(
         F.lit(n - 1),
         F.floor(F.col("doc_id").cast("long") * F.lit(n) / F.lit(int(bound) + 1)),
@@ -340,7 +342,7 @@ def pack_sequences(
         .withColumn("n_bins", F.col("last_bin") - F.col("first_bin") + 1)
         .select("doc_id", "n_tok", "start_off", "first_bin", "last_bin", "n_bins")
     )
-    out._cached = local  # caller-side unpersist handle
+    out._cached = local  # caller-side unpersist handle (None when empty)
     return out
 
 

@@ -318,7 +318,8 @@ def cleaned_corpus_packed(
     # run; released here, the final projection re-tokenizes the
     # checkpointed export once instead of pinning a cached relation for
     # the life of the session
-    packed._cached.unpersist()
+    if packed._cached is not None:
+        packed._cached.unpersist()
     return (
         corpus.select("doc_id", "source", "n_words")
         .join(packed, "doc_id")

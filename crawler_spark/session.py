@@ -47,9 +47,13 @@ def get_spark(
         # WindowGroupLimit (Partial) under the exchange only while K is at
         # most this threshold (Spark's default: 1,000). The wave pop's K is
         # a per-task round budget, which can be far larger; without the
-        # partial node every row of a cut group is shuffled. The group limit
-        # streams over sorted rows (a counter, no buffer), so no K is too
-        # large for it.
+        # partial node every row of a cut group is shuffled. The partial
+        # node costs a map-side sort: it needs its input sorted by (group,
+        # order), so each map partition sorts all of its cut-group rows
+        # before the shuffle. Where a partition holds few more than K rows
+        # of a group, little is pruned and that sort is pure cost, which
+        # is why Spark's default is low; the cost at K above 1,000 is not
+        # measured.
         .config("spark.sql.optimizer.windowGroupLimitThreshold", str((1 << 31) - 1))
         # AQE re-plans fire a SparkListenerSQLAdaptiveExecutionUpdate whose
         # payload is the FULL pretty-printed physical plan; with this

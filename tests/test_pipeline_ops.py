@@ -2118,6 +2118,19 @@ def test_cleaned_corpus_packed_leaves_no_cached_relation(spark):
     assert cache.isEmpty()
 
 
+def test_cleaned_corpus_packed_empty_when_every_doc_fails_gopher(spark):
+    """A corpus the Gopher floors reject whole (46-word docs under the
+    default 50-word floor) packs to an empty frame, not an error."""
+    from crawler_spark.pipeline.clean import cleaned_corpus_packed
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    out = cleaned_corpus_packed(_substr_corpus(spark), capacity=64, substr_n=5)
+    assert out.collect() == []
+    assert "n_bins" in out.columns
+    assert cache.isEmpty()
+
+
 def test_exact_substring_dedup_bytes_char_exact(spark):
     """Byte-level ExactSubstr semantics on a hand corpus: a shared run
     is cut from every copy but the first with boundaries exact to the
